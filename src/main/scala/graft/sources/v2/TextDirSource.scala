@@ -2,12 +2,15 @@ package graft.sources.v2
 
 import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
 import java.nio.charset.StandardCharsets
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.{Map => JMap}
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -51,6 +54,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (real corpora nest directories); `recursive=false` restricts to
   *    the top level, and `pathGlobFilter` (e.g. `*.txt`) filters by
   *    file NAME, matching Spark's built-in file-source option.
+  *    A `path` naming a single file reads that one document.
+  *  - NO PROCESS PER FILE on the local filesystem: without the native
+  *    libhadoop, Hadoop's local `create` sets the new file's mode by
+  *    forking `chmod`, and `listFiles` (through `LocatedFileStatus`)
+  *    or any `getPermission` call forks a `stat` — milliseconds per
+  *    document. So the planner walks the tree with `listStatus`, which
+  *    never reads permissions (as Spark's own file index does), and the
+  *    sink writes a local document through `java.nio` and sets Hadoop's
+  *    file mode (0666 under the conf's umask) with one `chmod` call.
+  *    Other filesystems (hdfs, s3a) keep Hadoop's `create`.
   *  - COLUMN PRUNING (`SupportsPushDownRequiredColumns`): a projection
   *    that drops both `text` and `length` never opens the files at all
   *    (a path-only listing query is metadata-only); `length` requires
@@ -195,16 +208,21 @@ private[v2] class TextDirScan(dir: String, required: StructType, opts: TextDirOp
     val fs = root.getFileSystem(hadoopConf)
     if (!fs.exists(root)) return Array.empty
 
-    // Single driver-side listing (one recursive RemoteIterator — on
-    // HDFS/S3 this is the batched listing RPC, not a per-file stat).
+    // Driver-side listStatus walk, the way Spark's own file index
+    // lists (not fs.listFiles: see the class doc). listStatus of a
+    // file is that file, so a root naming one document reads it; the
+    // checksummed local FS hides its .crc side files here.
     val files = ArrayBuffer.empty[TextFileSlice]
     val glob = opts.pathGlobFilter.map(g =>
       java.util.regex.Pattern.compile(TextDirSource.globToRegex(g)))
-    val it = fs.listFiles(root, opts.recursive)
-    while (it.hasNext) {
-      val st: FileStatus = it.next()
-      if (st.isFile && glob.forall(_.matcher(st.getPath.getName).matches()))
-        files += TextFileSlice(st.getPath.toString, st.getLen)
+    val dirs = scala.collection.mutable.Stack(root)
+    while (dirs.nonEmpty) {
+      fs.listStatus(dirs.pop()).foreach { st =>
+        if (st.isFile) {
+          if (glob.forall(_.matcher(st.getPath.getName).matches()))
+            files += TextFileSlice(st.getPath.toString, st.getLen)
+        } else if (opts.recursive && st.isDirectory) dirs.push(st.getPath)
+      }
     }
     if (files.isEmpty) return Array.empty
     val sorted = files.sortBy(_.path)
@@ -298,7 +316,9 @@ private[v2] case class TextFilesCommit(tmpDir: String, files: Array[String])
   * directories and survive). All I/O goes through the Hadoop
   * `FileSystem`, so `file:`/`hdfs:`/`s3a:` targets all work — with
   * the caveat that on object stores rename is a copy (the same
-  * trade-off Spark's own FileOutputCommitter v1 makes).
+  * trade-off Spark's own FileOutputCommitter v1 makes). The one
+  * exception is a document's bytes on the local filesystem, written
+  * through `java.nio` (see [[TextDirSource]]).
   *
   * Scale: writers stream rows to files with no buffering beyond one
   * row; commit messages carry file NAMES only (bytes stay on the
@@ -402,19 +422,32 @@ private[v2] class TextDirDataWriter(dir: String, pathIdx: Int, textIdx: Int,
     raw.mkdirs(tmp); raw
   }
   // LinkedHashSet: a duplicate name within one task overwrites the tmp
-  // file (fs.create overwrite=true) but must be committed ONCE — two
+  // file (both write paths truncate) but must be committed ONCE — two
   // entries would make job commit rename the same name twice and fail
   // on the second (already-moved) source after files landed.
   private val written = scala.collection.mutable.LinkedHashSet.empty[String]
+  // the mode Hadoop's create gives a new file: 0666 under the conf's umask
+  private lazy val localFileMode = PosixFilePermissions.fromString(
+    FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(conf.value)).toString)
   override def write(row: InternalRow): Unit = {
     val name = row.getUTF8String(pathIdx).toString
     require(name.nonEmpty && !name.contains("/") && !name.contains("\\") &&
       name != "." && name != "..",
       s"TextDirSource sink: file name must be a bare name, got '$name'")
-    val out = fs.create(new HPath(tmp, name), true)
+    val dst = new HPath(tmp, name)
     // UTF8String.getBytes IS the utf-8 encoding — no transcode pass
-    try out.write(row.getUTF8String(textIdx).getBytes)
-    finally out.close()
+    val bytes = row.getUTF8String(textIdx).getBytes
+    fs match {
+      case local: RawLocalFileSystem =>
+        // fork-free local create (see the class doc), same bytes and mode
+        val file = local.pathToFile(dst).toPath
+        Files.write(file, bytes)
+        Files.setPosixFilePermissions(file, localFileMode)
+      case other =>
+        val out = other.create(dst, true)
+        try out.write(bytes)
+        finally out.close()
+    }
     written += name
   }
   override def commit(): WriterCommitMessage = TextFilesCommit(tmp.toString, written.toArray)

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
@@ -120,6 +121,23 @@ class TextDirSourceSpec extends AnyFunSuite {
       assert(load(dir).count() == 2)
       val top = load(dir, "recursive" -> "false").select("path").collect().map(_.getString(0))
       assert(top.length == 1 && top.head.endsWith("top.txt"))
+    }
+  }
+
+  test("listing: .crc side files hidden, empty dirs ignored, recursive=false, single-file root") {
+    withDir { dir =>
+      Files.writeString(dir.resolve("a.txt"), "a")
+      Files.write(dir.resolve(".a.txt.crc"), Array[Byte](1, 2, 3, 4))
+      Files.createDirectories(dir.resolve("nested"))
+      Files.writeString(dir.resolve("nested/b.txt"), "b")
+      Files.createDirectories(dir.resolve("empty"))
+      def names(df: org.apache.spark.sql.DataFrame) =
+        df.select("path").collect().map(_.getString(0).stripPrefix(s"file:$dir/")).sorted.toSeq
+      assert(names(load(dir)) == Seq("a.txt", "nested/b.txt"))
+      assert(names(load(dir, "recursive" -> "false")) == Seq("a.txt"))
+      val single = load(dir.resolve("nested/b.txt")).collect()
+      assert(single.length == 1 && single.head.getString(0) == s"file:$dir/nested/b.txt" &&
+        single.head.getString(1) == "b")
     }
   }
 
@@ -264,6 +282,26 @@ class TextDirSourceSpec extends AnyFunSuite {
       } finally walk.close()
       // a checksummed read of the fresh file must not see the stale crc
       assert(load(out).select("text").head().getString(0) == "fresh")
+    }
+  }
+
+  test("V2 sink: files get Hadoop's mode, 0666 under the session conf's umask") {
+    def modes(out: Path): Seq[String] = {
+      val walk = Files.list(out)
+      try walk.iterator().asScala.toSeq.map(f =>
+        PosixFilePermissions.toString(Files.getPosixFilePermissions(f)))
+      finally walk.close()
+    }
+    withDir { dir =>
+      writeDocs(dir.resolve("sink"), "append", "a.txt" -> "alpha", "b.txt" -> "beta")
+      assert(modes(dir.resolve("sink")) == Seq("rw-r--r--", "rw-r--r--"))
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val key = "fs.permissions.umask-mode"
+      val before = Option(hconf.get(key))
+      hconf.set(key, "077")
+      try writeDocs(dir.resolve("private"), "append", "c.txt" -> "gamma")
+      finally before.fold(hconf.unset(key))(hconf.set(key, _))
+      assert(modes(dir.resolve("private")) == Seq("rw-------"))
     }
   }
 
