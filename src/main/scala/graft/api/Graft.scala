@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Fragments, Normalizer}
@@ -44,14 +44,26 @@ object Graft {
 
   /** Whole-file document source (= the reference's `open(f).read()`,
     * `etl_parser.py:1093-1094`, lifted to a corpus): one row per file
-    * with its path and full text. At scale this is the standard
-    * many-small-files pattern — Spark packs files into splits
-    * (`maxPartitionBytes`), no driver listing loop. */
-  def readDocuments(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.option("wholetext", "true").text(path)
-      .withColumn("path", input_file_name())
-      .withColumnRenamed("value", "text")
+    * with its path and full text, read through
+    * [[graft.sources.v2.TextDirSource]], the engine's one whole-document
+    * reader. `path` is a directory, a file or a glob (a last segment
+    * such as `*.txt`); only the direct children of each match are read,
+    * and names starting with `.` or `_` are skipped (the source's
+    * listing rule). A path that matches nothing raises
+    * `PATH_NOT_FOUND`, as Spark's file sources do. The source bins
+    * files by their bytes plus a 4 KiB open cost each, so partitions
+    * carry similar byte counts however skewed the document sizes.
+    * `path` is Hadoop's `Path.toString` (`file:/d/b c.txt`), not
+    * URL-encoded, so its last segment is the file's real name. */
+  def readDocuments(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (Option(fs.globStatus(p)).forall(_.isEmpty))
+      throw new AnalysisException("PATH_NOT_FOUND", Map("path" -> fs.makeQualified(p).toString))
+    spark.read.format("graft.sources.v2.TextDirSource")
+      .option("path", path).option("recursive", "false").load()
       .select(col("path"), col("text"))
+  }
 
   /** One-call near-duplicate clustering for any corpus — the dedup
     * story end to end: word-3-gram MinHash signatures (codegen'd

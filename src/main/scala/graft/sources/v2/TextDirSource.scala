@@ -2,19 +2,22 @@ package graft.sources.v2
 
 import java.io.{IOException, ObjectInputStream, ObjectOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
-import java.nio.file.attribute.PosixFilePermissions
+import java.nio.file.{FileAlreadyExistsException, Files, Path => JPath}
+import java.nio.file.attribute.{PosixFilePermission, PosixFilePermissions}
 import java.util.{Map => JMap}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.io.Text
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -49,21 +52,42 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `org.apache.hadoop.fs.FileSystem`, so `path` may be a local
   *    directory, `file:///`, `hdfs:///`, or any other scheme with a
   *    FileSystem impl + credentials on the classpath; the session's
-  *    Hadoop configuration is captured at planning time and shipped to
-  *    executors (Writable round-trip). Listing is RECURSIVE by default
-  *    (real corpora nest directories); `recursive=false` restricts to
-  *    the top level, and `pathGlobFilter` (e.g. `*.txt`) filters by
-  *    file NAME, matching Spark's built-in file-source option.
-  *    A `path` naming a single file reads that one document.
+  *    Hadoop configuration is captured once per scan or write and
+  *    shipped to executors inside the reader/writer factory.
+  *  - LISTING RULE: `path` goes through `fs.globStatus`, so a glob
+  *    (a last segment such as `*.txt`) expands and a plain path names
+  *    itself; a missing path lists nothing (an empty table). Each match
+  *    is listed with `listStatus`, and every listed entry whose name
+  *    starts with `.` or `_` is skipped, file or directory — the rule
+  *    of Spark's own file index, so `_SUCCESS` markers, dot-files and a
+  *    crashed sink's `_tmp_*` attempt directories are never read.
+  *    Listing is RECURSIVE by default (real corpora nest directories);
+  *    `recursive=false` reads only the direct children of each match,
+  *    and `pathGlobFilter` (e.g. `*.txt`) filters by file NAME,
+  *    matching Spark's built-in file-source option. A `path` naming a
+  *    single file reads that one document. The planned file count is
+  *    reported as the scan node's `numFiles` driver metric, the metric
+  *    Spark's file scan carries.
+  *  - THE CONF SHIPS AS PLAIN PAIRS: Hadoop's `Configuration.write` /
+  *    `readFields` gzip every property's source list separately,
+  *    about 8 ms per copy for a ~1,100-key session conf, paid by the
+  *    driver per job and by every task that decodes a factory. The
+  *    wrapper writes an entry count and the raw key/value strings
+  *    instead (well under 1 ms each way), and reads them back with
+  *    `Configuration.set` — exactly what `readFields` does, minus the
+  *    source lists. A broadcast would only move the encoding cost onto
+  *    the driver's planning path.
   *  - NO PROCESS PER FILE on the local filesystem: without the native
-  *    libhadoop, Hadoop's local `create` sets the new file's mode by
-  *    forking `chmod`, and `listFiles` (through `LocatedFileStatus`)
-  *    or any `getPermission` call forks a `stat` — milliseconds per
-  *    document. So the planner walks the tree with `listStatus`, which
-  *    never reads permissions (as Spark's own file index does), and the
-  *    sink writes a local document through `java.nio` and sets Hadoop's
-  *    file mode (0666 under the conf's umask) with one `chmod` call.
-  *    Other filesystems (hdfs, s3a) keep Hadoop's `create`.
+  *    libhadoop, Hadoop's local `create` and `mkdirs` set the new
+  *    entry's mode by forking `chmod`, and `listFiles` (through
+  *    `LocatedFileStatus`) or any `getPermission` call forks a `stat` —
+  *    milliseconds per document. So the planner walks the tree with
+  *    `listStatus`, which never reads permissions (as Spark's own file
+  *    index does); the sink writes a local document through `java.nio`
+  *    and sets Hadoop's file mode (0666 under the conf's umask) with
+  *    one `chmod` call, and creates each task's attempt directory the
+  *    same way with Hadoop's directory mode (0777 under the umask).
+  *    Other filesystems (hdfs, s3a) keep Hadoop's `create` / `mkdirs`.
   *  - COLUMN PRUNING (`SupportsPushDownRequiredColumns`): a projection
   *    that drops both `text` and `length` never opens the files at all
   *    (a path-only listing query is metadata-only); `length` requires
@@ -92,6 +116,11 @@ object TextDirSource {
     StructField("path", StringType, nullable = false),
     StructField("text", StringType, nullable = false),
     StructField("length", LongType, nullable = false)))
+
+  /** The listing rule (see the class doc): names starting with `.` or
+    * `_` are never read. */
+  private[v2] def hidden(name: String): Boolean =
+    name.startsWith(".") || name.startsWith("_")
 
   /** `pathGlobFilter` supports the usual `*` / `?` / `[abc]` /
     * `[a-z]` / `[!abc]` file-name wildcards; everything else is
@@ -179,51 +208,76 @@ private[v2] case class TextFileSlice(path: String, len: Long)
 /** A size-budgeted bin of whole files; never splits a document. */
 private[v2] case class TextFilesPartition(files: Array[TextFileSlice]) extends InputPartition
 
-/** Hadoop `Configuration` is `Writable`, not `Serializable`; this is
-  * the standard Writable-round-trip wrapper (same shape as Spark's
-  * internal `SerializableConfiguration`) so executors open files with
-  * the session's filesystem credentials/settings. */
+/** Hadoop `Configuration` is `Writable`, not `Serializable`; this
+  * wrapper ships it as plain key/value pairs (see the class doc of
+  * [[TextDirSource]] for why not `Configuration.write`) so executors
+  * open files with the session's filesystem credentials/settings. */
 private[v2] class SerializableHadoopConf(@transient var value: Configuration)
     extends Serializable {
   @throws[IOException]
   private def writeObject(out: ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); value.write(out)
+    out.defaultWriteObject()
+    val entries = value.asScala.toSeq
+    out.writeInt(entries.size)
+    entries.foreach { e => Text.writeString(out, e.getKey); Text.writeString(out, e.getValue) }
   }
   @throws[IOException]
   private def readObject(in: ObjectInputStream): Unit = {
-    in.defaultReadObject(); value = new Configuration(false); value.readFields(in)
+    in.defaultReadObject()
+    value = new Configuration(false)
+    (0 until in.readInt()).foreach(_ => value.set(Text.readString(in), Text.readString(in)))
   }
+}
+
+/** The scan's `numFiles` metric: files planned for the read. */
+private[v2] class TextDirNumFilesMetric extends CustomSumMetric {
+  override def name(): String = "numFiles"
+  override def description(): String = "number of files read"
 }
 
 private[v2] class TextDirScan(dir: String, required: StructType, opts: TextDirOptions)
     extends Scan with Batch {
+  // one snapshot per scan, shared by planning and the reader factory
+  @transient private lazy val hadoopConf = SparkSession.active.sessionState.newHadoopConf()
+  @volatile private var plannedFiles = 0L
+
   override def readSchema(): StructType = required
   override def description(): String = s"TextDirScan(dir=$dir, cols=${required.fieldNames.mkString(",")})"
   override def toBatch: Batch = this
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new TextDirNumFilesMetric)
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = {
+    val n = plannedFiles
+    Array(new CustomTaskMetric {
+      override def name(): String = "numFiles"
+      override def value(): Long = n
+    })
+  }
 
   override def planInputPartitions(): Array[InputPartition] = {
     val spark = SparkSession.active
-    val hadoopConf = spark.sessionState.newHadoopConf()
     val root = new HPath(dir)
     val fs = root.getFileSystem(hadoopConf)
-    if (!fs.exists(root)) return Array.empty
 
-    // Driver-side listStatus walk, the way Spark's own file index
-    // lists (not fs.listFiles: see the class doc). listStatus of a
-    // file is that file, so a root naming one document reads it; the
-    // checksummed local FS hides its .crc side files here.
+    // Driver-side listStatus walk under the listing rule (class doc),
+    // the way Spark's own file index lists (not fs.listFiles).
+    // listStatus of a file is that file, so a match naming one
+    // document reads it; the checksummed local FS hides its .crc side
+    // files here.
     val files = ArrayBuffer.empty[TextFileSlice]
     val glob = opts.pathGlobFilter.map(g =>
       java.util.regex.Pattern.compile(TextDirSource.globToRegex(g)))
-    val dirs = scala.collection.mutable.Stack(root)
+    val matches = Option(fs.globStatus(root)).getOrElse(Array.empty[FileStatus])
+    val dirs = scala.collection.mutable.Stack.from(matches.map(_.getPath))
     while (dirs.nonEmpty) {
-      fs.listStatus(dirs.pop()).foreach { st =>
+      fs.listStatus(dirs.pop()).filterNot(st => TextDirSource.hidden(st.getPath.getName)).foreach { st =>
         if (st.isFile) {
           if (glob.forall(_.matcher(st.getPath.getName).matches()))
             files += TextFileSlice(st.getPath.toString, st.getLen)
         } else if (opts.recursive && st.isDirectory) dirs.push(st.getPath)
       }
     }
+    plannedFiles = files.size
     if (files.isEmpty) return Array.empty
     val sorted = files.sortBy(_.path)
 
@@ -254,8 +308,7 @@ private[v2] class TextDirScan(dir: String, required: StructType, opts: TextDirOp
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new TextDirReaderFactory(required.fieldNames,
-      new SerializableHadoopConf(SparkSession.active.sessionState.newHadoopConf()))
+    new TextDirReaderFactory(required.fieldNames, new SerializableHadoopConf(hadoopConf))
 }
 
 /** One row per file, looping the files of a composite partition; only
@@ -419,16 +472,31 @@ private[v2] class TextDirDataWriter(dir: String, pathIdx: Int, textIdx: Int,
       case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
       case other => other
     }
-    raw.mkdirs(tmp); raw
+    raw match {
+      case local: RawLocalFileSystem =>
+        mkdirsLocal(local.pathToFile(tmp).toPath, localMode(FsPermission.getDirDefault))
+      case other => other.mkdirs(tmp)
+    }
+    raw
   }
+  /** `RawLocalFileSystem.mkdirs` without its `chmod` fork (see the class
+    * doc): creates each missing directory down to `d` and gives it
+    * Hadoop's directory mode. */
+  private def mkdirsLocal(d: JPath, mode: java.util.Set[PosixFilePermission]): Unit =
+    if (!Files.isDirectory(d)) {
+      Option(d.getParent).foreach(mkdirsLocal(_, mode))
+      try { Files.createDirectory(d); Files.setPosixFilePermissions(d, mode) }
+      catch { case _: FileAlreadyExistsException if Files.isDirectory(d) => () } // another task made it
+    }
+  // the mode Hadoop gives a new local entry: its default under the conf's umask
+  private def localMode(default: FsPermission) = PosixFilePermissions.fromString(
+    default.applyUMask(FsPermission.getUMask(conf.value)).toString)
   // LinkedHashSet: a duplicate name within one task overwrites the tmp
   // file (both write paths truncate) but must be committed ONCE — two
   // entries would make job commit rename the same name twice and fail
   // on the second (already-moved) source after files landed.
   private val written = scala.collection.mutable.LinkedHashSet.empty[String]
-  // the mode Hadoop's create gives a new file: 0666 under the conf's umask
-  private lazy val localFileMode = PosixFilePermissions.fromString(
-    FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(conf.value)).toString)
+  private lazy val localFileMode = localMode(FsPermission.getFileDefault)
   override def write(row: InternalRow): Unit = {
     val name = row.getUTF8String(pathIdx).toString
     require(name.nonEmpty && !name.contains("/") && !name.contains("\\") &&

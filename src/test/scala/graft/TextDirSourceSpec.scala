@@ -131,6 +131,12 @@ class TextDirSourceSpec extends AnyFunSuite {
       Files.createDirectories(dir.resolve("nested"))
       Files.writeString(dir.resolve("nested/b.txt"), "b")
       Files.createDirectories(dir.resolve("empty"))
+      // names starting with . or _ are never read, files or directories
+      Files.writeString(dir.resolve(".hidden.txt"), "h")
+      Files.writeString(dir.resolve("_SUCCESS"), "")
+      Files.createDirectories(dir.resolve("_tmp_q_0-1"))
+      Files.writeString(dir.resolve("_tmp_q_0-1/inner.txt"), "crashed attempt")
+      Files.writeString(dir.resolve("nested/_c.txt"), "c")
       def names(df: org.apache.spark.sql.DataFrame) =
         df.select("path").collect().map(_.getString(0).stripPrefix(s"file:$dir/")).sorted.toSeq
       assert(names(load(dir)) == Seq("a.txt", "nested/b.txt"))
@@ -326,6 +332,75 @@ class TextDirSourceSpec extends AnyFunSuite {
       assert(p.contains("TextDirScan") && p.contains("cols=path"),
         s"pruned projection did not reach the V2 scan:\n$p")
       assert(pruned.head().getString(0).endsWith("a.txt"))
+    }
+  }
+
+  test("scan node reports the planned file count as its numFiles metric") {
+    withDir { dir =>
+      (1 to 3).foreach(i => Files.writeString(dir.resolve(s"f$i.txt"), s"doc $i"))
+      Files.writeString(dir.resolve("_SUCCESS"), "")
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+      def scans(p: SparkPlan): Seq[BatchScanExec] = p match {
+        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+        case s: BatchScanExec => Seq(s)
+        case o => o.children.flatMap(scans)
+      }
+      val df = load(dir)
+      assert(df.collect().length == 3)
+      assert(scans(df.queryExecution.executedPlan).map(_.metrics("numFiles").value) == Seq(3L))
+    }
+  }
+
+  /** The readDocuments contract fixture: two visible top-level
+    * documents (one with a space in its name) beside hidden files, a
+    * crashed sink's attempt directory and a nested directory. */
+  private def documentsDir(dir: Path): Path = {
+    val in = Files.createDirectories(dir.resolve("in"))
+    Files.writeString(in.resolve("a.txt"), "alpha")
+    Files.writeString(in.resolve("b c.txt"), "beta gamma")
+    Files.writeString(in.resolve(".hidden.txt"), "hidden")
+    Files.writeString(in.resolve("_SUCCESS"), "")
+    Files.createDirectories(in.resolve("_tmp_q_0-1"))
+    Files.writeString(in.resolve("_tmp_q_0-1/inner.txt"), "crashed attempt")
+    Files.createDirectories(in.resolve("nested"))
+    Files.writeString(in.resolve("nested/d.txt"), "nested")
+    in
+  }
+
+  private def documents(path: String): Seq[(String, String)] =
+    graft.api.Graft.readDocuments(spark, path).collect()
+      .map(r => r.getString(0) -> r.getString(1)).sortBy(_._1).toSeq
+
+  test("readDocuments: top-level visible files only, a glob expands, a missing path raises") {
+    withDir { dir =>
+      val in = documentsDir(dir)
+      val want = Seq(s"file:$in/a.txt" -> "alpha", s"file:$in/b c.txt" -> "beta gamma")
+      assert(documents(in.toString) == want)
+      assert(documents(s"$in/*.txt") == want)
+      intercept[org.apache.spark.sql.AnalysisException] {
+        graft.api.Graft.readDocuments(spark, dir.resolve("missing").toString)
+      }
+      intercept[org.apache.spark.sql.AnalysisException] {
+        graft.api.Graft.readDocuments(spark, s"$in/*.md")
+      }
+    }
+  }
+
+  test("readDocuments -> writeDocuments keeps file names with spaces") {
+    withDir { dir =>
+      val in = documentsDir(dir)
+      val out = dir.resolve("out")
+      val docs = graft.api.Graft.readDocuments(spark, in.toString)
+      graft.api.Graft.writeDocuments(docs.select(
+        org.apache.spark.sql.functions.regexp_extract(docs("path"), "([^/]+)$", 1).as("path"),
+        docs("text")), out.toString)
+      val walk = Files.list(out)
+      try assert(walk.iterator().asScala.map(_.getFileName.toString).toSeq.sorted ==
+        Seq("a.txt", "b c.txt"))
+      finally walk.close()
+      assert(Files.readString(out.resolve("b c.txt")) == "beta gamma")
     }
   }
 

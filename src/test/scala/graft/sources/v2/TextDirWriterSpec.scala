@@ -1,8 +1,13 @@
 package graft.sources.v2
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, ObjectInputStream, ObjectOutputStream}
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.unsafe.types.UTF8String
@@ -11,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Writer/committer-level contracts of the V2 sink that are hard to
   * reach end-to-end: Spark's BatchWrite.abort passes a NULL slot for
   * every task that never committed, and a task may write the same file
-  * name twice. Both must leave the output directory clean.
+  * name twice. Both must leave the output directory clean. Also the
+  * shipped conf's encoding and the attempt directory's mode.
   */
 class TextDirWriterSpec extends AnyFunSuite {
   // a live session is required for the writer's Hadoop conf snapshot
@@ -70,6 +76,44 @@ class TextDirWriterSpec extends AnyFunSuite {
       write.commit(Array[WriterCommitMessage](msg)) // must not throw on rename
       assert(Files.readString(dir.resolve("dup.txt")) == "second")
       assert(Files.readString(dir.resolve("other.txt")) == "stays")
+    }
+  }
+
+  test("a Java-serialized conf keeps every key and value, session-set keys included") {
+    val key = "graft.test.shipped"
+    spark.conf.set(key, "yes")
+    try {
+      val conf = spark.sessionState.newHadoopConf()
+      assert(conf.get(key) == "yes")
+      val bytes = new ByteArrayOutputStream
+      val out = new ObjectOutputStream(bytes)
+      out.writeObject(new SerializableHadoopConf(conf))
+      out.close()
+      val back = new ObjectInputStream(new ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[SerializableHadoopConf].value
+      def pairs(c: Configuration) = c.asScala.map(e => e.getKey -> e.getValue).toMap
+      assert(pairs(conf).size > 100, "expected the full session conf")
+      assert(pairs(back) == pairs(conf))
+      assert(back.get(key) == "yes")
+    } finally spark.conf.unset(key)
+  }
+
+  test("before commit, the attempt directory has Hadoop's directory mode under the umask") {
+    spark.sparkContext
+    withDir { dir =>
+      def modes(umask: Option[String]): Seq[String] = {
+        val conf = spark.sessionState.newHadoopConf()
+        umask.foreach(conf.set("fs.permissions.umask-mode", _))
+        val out = dir.resolve(s"out-${umask.getOrElse("default")}")
+        val w = new TextDirDataWriter(out.toString, 0, 1, "q-mode", 0, 1L,
+          new SerializableHadoopConf(conf))
+        w.write(row("a.txt", "alpha"))
+        // the attempt dir and the output root the task had to create
+        Seq(out.resolve("_tmp_q-mode_0-1"), out).map(d =>
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(d)))
+      }
+      assert(modes(None) == Seq("rwxr-xr-x", "rwxr-xr-x"))
+      assert(modes(Some("077")) == Seq("rwx------", "rwx------"))
     }
   }
 }
