@@ -9,17 +9,13 @@ import org.apache.spark.sql.DataFrame
   * frames into a long-lived session (per-call corpora differ there,
   * so CacheManager's plan-keyed dedup can't collapse the entries).
   *
-  * The GRADED operator paths deliberately do NOT wire this listener
-  * (r18 ADVICE adjudicated r19): every graded invocation of an op
-  * builds the SAME canonical plan over the same parquet dir, and
-  * `Dataset.persist` goes through CacheManager, which keys entries by
-  * the canonicalized plan (`sameResult`) — a re-persist of an
-  * already-cached plan is a no-op, so repeated bench reps share ONE
-  * process-scoped entry and no accumulation occurs. Wiring the
-  * listener there instead unpersisted that shared entry after rep 1
-  * and made every later rep recompute cold (measured 1.9–2.9×
-  * per-query regressions). Graded paths drop the `Managed` handle;
-  * public APIs wrap with this helper.
+  * The GRADED operator paths do NOT wire this listener: their
+  * persisted tails stay cached until the caller clears the cache
+  * (`operator_session` in `perfbench` reads `cache.residual_mb` > 0
+  * after each request; `Bench` and `Verify` clear the SQL cache before
+  * every query). Releasing them when their query completes is ROADMAP
+  * direction 4(c). Graded paths drop the `Managed` handle; public
+  * APIs wrap with this helper.
   *
   * Semantics: the first materialization of the result (or any frame
   * derived from it) runs on the warm cache; the release fires after

@@ -335,10 +335,14 @@ object Graft {
     * sample). Returns `(rnk, doc_id, w, r)`. Rows with w ≤ 0 are
     * dropped (they can never be sampled). The key is a map-side
     * projection and the top-k plans as TakeOrderedAndProject — one
-    * pass, no shuffle, at any corpus size. */
+    * pass, no shuffle, at any corpus size. `k` is bounded to
+    * 1..100,000 (`TrainingData.MaxSampleK`): the k sampled rows are
+    * ranked as one array in one task. */
   def sampleByWeight(df: DataFrame, idCol: String = "doc_id",
       weightCol: String = "w", k: Int = 25): DataFrame = {
     require(k >= 1, s"sampleByWeight: need k >= 1 (got $k)")
+    require(k <= graft.operators.TrainingData.MaxSampleK,
+      s"sampleByWeight: need k <= ${graft.operators.TrainingData.MaxSampleK} (got $k)")
     graft.operators.TrainingData.sampleWeightedOf(
       df.select(col(idCol).as("doc_id"), col(weightCol).as("w")), k)
   }

@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.DataFrame
 
 /** Lineage truncation for the iterative ops, honoring the session's
-  * fault-tolerance configuration.
+  * fault-tolerance setup.
   *
   * `localCheckpoint` blocks live only in executor storage: fast (no
   * distributed-FS write) but NOT fault-tolerant — on a cluster, losing
@@ -13,12 +13,11 @@ import org.apache.spark.sql.DataFrame
   * each superstep should restart from the last RELIABLE cut instead of
   * from zero.
   *
-  * Mode (`spark.graft.checkpoint.reliable`, runtime-settable):
-  *  - `auto` (default): reliable iff the context has a checkpoint dir
-  *    (`sc.setCheckpointDir` — the cluster deployment signal; local
-  *    sessions never set one, so the bench keeps localCheckpoint).
-  *  - `never`: always localCheckpoint (escape hatch — e.g. a cluster
-  *    session whose checkpoint dir serves other jobs).
+  * Rule: reliable iff the context has a checkpoint dir
+  * (`sc.setCheckpointDir` — the cluster deployment signal; local
+  * sessions never set one, so the bench keeps localCheckpoint). There
+  * is no override: a session whose checkpoint dir serves other jobs
+  * gets reliable cuts here too.
   *
   * Reliable-mode caveats (Spark's own): checkpoint files accumulate
   * until application end unless
@@ -34,21 +33,10 @@ import org.apache.spark.sql.DataFrame
   * optimization, and in reliable mode the extra cache-read job is the
   * price of fault tolerance. */
 object Checkpoints {
-  def truncate(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val sp = df.sparkSession
-    val mode = sp.conf.get("spark.graft.checkpoint.reliable", "auto")
-    val reliable = mode match {
-      case "never" => false
-      case "auto"  => sp.sparkContext.getCheckpointDir.isDefined
-      case other =>
-        // Fail fast on typos: a silent fallback to auto would re-enable
-        // per-superstep reliable checkpoints when the user asked "never".
-        sys.error(s"spark.graft.checkpoint.reliable must be 'auto' or 'never', got '$other'")
-    }
-    if (reliable) {
+  def truncate(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
       val pinned = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try pinned.checkpoint(eager = true)
       finally pinned.unpersist(blocking = false)
     } else df.localCheckpoint(eager)
-  }
 }

@@ -629,14 +629,7 @@ object LlmPipeline {
 
   /** The closure itself, over any (doc_a, doc_b) pair frame — see
     * [[dedupCc]] for the algorithm and scale notes. */
-  private[graft] def connectedComponents(pairs: DataFrame): DataFrame =
-    // Loop planning mode hook: adaptive by default ('pinned' trades
-    // AQE's in-loop skew defense for one job per superstep probe — the
-    // A/B history is in the LoopPlanning scaladoc). The hook hands
-    // back `pairs` re-rooted on the pin-scoped session (identity under
-    // the adaptive default); the returned frame reads checkpointed
-    // blocks.
-    graft.functions.LoopPlanning.pinned(pairs) { pairs =>
+  private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
     // persist the pair list BEFORE mirroring it (r22 — the pagerank
     // pairs0 repair, guide §2.4): `pairs` appears in BOTH union arms
     // below, so materializing the edge cache ran the entire upstream

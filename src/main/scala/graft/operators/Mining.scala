@@ -288,14 +288,7 @@ object Mining {
   /** Core: PageRank over the undirected closure of `pairs(a, b)` (each
     * input pair contributes both directions; pairs must be distinct).
     * Exposed separately for known-answer specs on planted graphs. */
-  def pagerankRanks(pairs: DataFrame, iters: Int): DataFrame =
-    // Loop planning mode hook: adaptive by default (AQE's runtime
-    // re-plan is the only in-loop skew defense; the A/B history is in
-    // the LoopPlanning scaladoc), 'pinned' available where the fixed
-    // superstep shape makes per-stage re-planning pure overhead. The
-    // hook hands back `pairs` re-rooted on the pin-scoped session
-    // (identity under the adaptive default).
-    graft.functions.LoopPlanning.pinned(pairs) { pairs =>
+  def pagerankRanks(pairs: DataFrame, iters: Int): DataFrame = {
     // persist the DISTINCT pair list before mirroring it (r21, guide
     // §2.4): `pairs` appears twice in rawEdges (forward + swapped) and
     // rawEdges twice more (deg agg, edge build) — without the cache the

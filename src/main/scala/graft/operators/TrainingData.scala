@@ -2351,6 +2351,11 @@ object TrainingData {
   /** Sample size for B94. */
   private[graft] val SampleWeightedK = 25
 
+  /** Largest k `api.Graft.sampleByWeight` accepts: the sample is packed
+    * into ONE array cell by one task ([[sampleWeightedOf]]), about 40 B
+    * per row, so 100,000 rows is a ~4 MB cell. */
+  private[graft] val MaxSampleK = 100000
+
   /** B94 — `op_sample_weighted`: weighted sampling WITHOUT replacement
     * in one pass (Efraimidis & Spirakis 2006, "Weighted random
     * sampling with a reservoir": draw u_i ~ U(0,1), rank by

@@ -40,11 +40,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    composite partitions under a size budget, so a corpus of millions
   *    of KB-sized documents plans O(bytes/budget) partitions instead of
   *    one per file (the per-file form is a driver-side partition-array
-  *    and scheduler bottleneck at corpus scale). The budget follows
-  *    Spark's own file-source sizing: `min(maxPartitionBytes,
-  *    max(openCostInBytes, totalBytes / minPartitionNum))`, where each
-  *    file is weighted `size + openCostInBytes` so tiny files still pay
-  *    their open cost and small corpora keep cluster parallelism. A bin
+  *    and scheduler bottleneck at corpus scale). The budget is Spark's
+  *    own file-source sizing at its defaults: `min(128 MiB, max(4 KiB,
+  *    totalBytes / defaultParallelism))`, where each file is weighted
+  *    `size + 4 KiB` (the open cost) so tiny files still pay their open
+  *    cost and small corpora keep cluster parallelism. A bin
   *    never exceeds the budget unless a single file does — a file
   *    larger than the budget gets a partition of its own (documents
   *    never split: whole-document semantics).
@@ -63,11 +63,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    crashed sink's `_tmp_*` attempt directories are never read.
   *    Listing is RECURSIVE by default (real corpora nest directories);
   *    `recursive=false` reads only the direct children of each match,
-  *    and `pathGlobFilter` (e.g. `*.txt`) filters by file NAME,
-  *    matching Spark's built-in file-source option. A `path` naming a
-  *    single file reads that one document. The planned file count is
-  *    reported as the scan node's `numFiles` driver metric, the metric
-  *    Spark's file scan carries.
+  *    so a `*.txt` last segment with `recursive=false` filters the
+  *    top-level files by name. A `path` naming a single file reads
+  *    that one document. The planned file count is reported as the
+  *    scan node's `numFiles` driver metric, the metric Spark's file
+  *    scan carries.
   *  - THE CONF SHIPS AS PLAIN PAIRS: Hadoop's `Configuration.write` /
   *    `readFields` gzip every property's source list separately,
   *    about 8 ms per copy for a ~1,100-key session conf, paid by the
@@ -94,10 +94,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    one read, but the pruned row carries only the requested fields
   *    (asserted in TextDirSourceSpec via the scan's ReadSchema).
   *
-  * Options: `path` (required), `maxPartitionBytes` (default 128 MiB),
-  * `openCostInBytes` (default 4 KiB), `minPartitionNum` (default
-  * `sparkContext.defaultParallelism`), `recursive` (default true),
-  * `pathGlobFilter` (default none).
+  * Options: `path` (required) and `recursive` (default true). The
+  * removed sizing options (`maxPartitionBytes`, `openCostInBytes`,
+  * `minPartitionNum`) and `pathGlobFilter` raise
+  * `IllegalArgumentException` naming what replaces them, so a caller's
+  * setting is never dropped silently.
   */
 class TextDirSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -122,57 +123,50 @@ object TextDirSource {
   private[v2] def hidden(name: String): Boolean =
     name.startsWith(".") || name.startsWith("_")
 
-  /** `pathGlobFilter` supports the usual `*` / `?` / `[abc]` /
-    * `[a-z]` / `[!abc]` file-name wildcards; everything else is
-    * matched literally. Hardened against glob-ish garbage: a `[` with
-    * no closing `]` (or an empty class) is a LITERAL bracket, never a
-    * `PatternSyntaxException` at planning time, and `^` / `]` / `-`
-    * outside a class are literals, never regex anchors. */
-  private[graft] def globToRegex(glob: String): String = {
-    val sb = new StringBuilder
-    def classBody(raw: String): String = raw.flatMap {
-      case c if "\\[]&^".contains(c) => "\\" + c   // class metachars; '-' kept for ranges
-      case c => c.toString
+  /** Partition sizing, fixed at Spark's file-source defaults (see the
+    * class doc): the budget cap and each file's open cost. */
+  private[v2] val MaxPartitionBytes: Long = 128L * 1024 * 1024
+  private[v2] val OpenCostInBytes: Long = 4096L
+
+  /** Greedy next-fit over the path-sorted files: close the bin before
+    * it would exceed `budget`, weighting each file `len + openCost`. A
+    * single file >= budget lands in a bin of its own (whole-document
+    * semantics — never split). */
+  private[graft] def nextFit(sorted: Seq[TextFileSlice], budget: Long,
+      openCost: Long): Seq[TextFilesPartition] = {
+    val bins = ArrayBuffer.empty[TextFilesPartition]
+    val bin = ArrayBuffer.empty[TextFileSlice]
+    var binBytes = 0L
+    def close(): Unit = if (bin.nonEmpty) {
+      bins += TextFilesPartition(bin.toArray); bin.clear(); binBytes = 0L
     }
-    var i = 0
-    while (i < glob.length) {
-      glob.charAt(i) match {
-        case '*' => sb.append("[^/]*"); i += 1
-        case '?' => sb.append("[^/]"); i += 1
-        case '[' =>
-          val j = glob.indexOf(']', i + 2)         // i+2: class body must be non-empty
-          val body0 = if (j < 0) "" else glob.substring(i + 1, j)
-          val neg = body0.startsWith("!") || body0.startsWith("^")
-          val body = if (neg) body0.substring(1) else body0
-          if (j < 0 || body.isEmpty) { sb.append("\\["); i += 1 }  // unbalanced/empty: literal
-          else {
-            sb.append('[').append(if (neg) "^" else "").append(classBody(body)).append(']')
-            i = j + 1
-          }
-        case c if "\\.()+|{}$^]-".contains(c) => sb.append('\\').append(c); i += 1
-        case c => sb.append(c); i += 1
-      }
+    sorted.foreach { f =>
+      val w = f.len + openCost
+      if (binBytes > 0 && binBytes + w > budget) close()
+      bin += f; binBytes += w
     }
-    sb.toString
+    close()
+    bins.toSeq
   }
 }
 
-private[v2] case class TextDirOptions(
-    maxPartitionBytes: Long,
-    openCostInBytes: Long,
-    minPartitionNum: Option[Int],
-    recursive: Boolean,
-    pathGlobFilter: Option[String])
+private[v2] case class TextDirOptions(recursive: Boolean)
 
 private[v2] object TextDirOptions {
+  /** Removed option names (lower-cased) and what replaces each. */
+  private val Removed: Map[String, String] = {
+    val sizing = "partition sizing is fixed at Spark's file-source defaults"
+    Map("maxpartitionbytes" -> sizing, "opencostinbytes" -> sizing,
+      "minpartitionnum" -> sizing,
+      "pathglobfilter" -> "put the glob in `path` instead, e.g. dir/*.txt")
+  }
+
   def apply(props: JMap[String, String]): TextDirOptions = {
-    def get(k: String): Option[String] = Option(props.get(k)).map(_.trim).filter(_.nonEmpty)
-    TextDirOptions(
-      maxPartitionBytes = get("maxPartitionBytes").map(_.toLong).getOrElse(128L * 1024 * 1024),
-      openCostInBytes = get("openCostInBytes").map(_.toLong).getOrElse(4096L),
-      minPartitionNum = get("minPartitionNum").map(_.toInt),
-      recursive = get("recursive").forall(_.toBoolean),
-      pathGlobFilter = get("pathGlobFilter"))
+    val stale = props.keySet.asScala.toSeq.sorted.filter(k => Removed.contains(k.toLowerCase))
+    require(stale.isEmpty, stale.map(k =>
+      s"TextDirSource option '$k' was removed: ${Removed(k.toLowerCase)}").mkString("; "))
+    TextDirOptions(recursive =
+      Option(props.get("recursive")).map(_.trim).filter(_.nonEmpty).forall(_.toBoolean))
   }
 }
 
@@ -203,10 +197,10 @@ private[v2] class TextDirScanBuilder(dir: String, opts: TextDirOptions)
 
 /** One whole file inside a composite partition: fully-qualified URI +
   * its listed length (the reader allocates the exact buffer). */
-private[v2] case class TextFileSlice(path: String, len: Long)
+private[graft] case class TextFileSlice(path: String, len: Long)
 
 /** A size-budgeted bin of whole files; never splits a document. */
-private[v2] case class TextFilesPartition(files: Array[TextFileSlice]) extends InputPartition
+private[graft] case class TextFilesPartition(files: Array[TextFileSlice]) extends InputPartition
 
 /** Hadoop `Configuration` is `Writable`, not `Serializable`; this
   * wrapper ships it as plain key/value pairs (see the class doc of
@@ -265,16 +259,12 @@ private[v2] class TextDirScan(dir: String, required: StructType, opts: TextDirOp
     // document reads it; the checksummed local FS hides its .crc side
     // files here.
     val files = ArrayBuffer.empty[TextFileSlice]
-    val glob = opts.pathGlobFilter.map(g =>
-      java.util.regex.Pattern.compile(TextDirSource.globToRegex(g)))
     val matches = Option(fs.globStatus(root)).getOrElse(Array.empty[FileStatus])
     val dirs = scala.collection.mutable.Stack.from(matches.map(_.getPath))
     while (dirs.nonEmpty) {
       fs.listStatus(dirs.pop()).filterNot(st => TextDirSource.hidden(st.getPath.getName)).foreach { st =>
-        if (st.isFile) {
-          if (glob.forall(_.matcher(st.getPath.getName).matches()))
-            files += TextFileSlice(st.getPath.toString, st.getLen)
-        } else if (opts.recursive && st.isDirectory) dirs.push(st.getPath)
+        if (st.isFile) files += TextFileSlice(st.getPath.toString, st.getLen)
+        else if (opts.recursive && st.isDirectory) dirs.push(st.getPath)
       }
     }
     plannedFiles = files.size
@@ -282,29 +272,13 @@ private[v2] class TextDirScan(dir: String, required: StructType, opts: TextDirOp
     val sorted = files.sortBy(_.path)
 
     // Spark file-source budget: small totals split down to cluster
-    // parallelism; large totals cap at maxPartitionBytes. openCost
-    // weights each file so a million empty files still bin-pack.
-    val weighted = sorted.iterator.map(_.len + opts.openCostInBytes).sum
-    val minParts = opts.minPartitionNum.getOrElse(spark.sparkContext.defaultParallelism)
-    val budget = math.min(opts.maxPartitionBytes,
-      math.max(opts.openCostInBytes, weighted / math.max(1, minParts)))
-
-    // Greedy next-fit over the path-sorted list: close the bin before
-    // it would exceed the budget. A single file >= budget lands in a
-    // bin of its own (whole-document semantics — never split).
-    val bins = ArrayBuffer.empty[InputPartition]
-    val bin = ArrayBuffer.empty[TextFileSlice]
-    var binBytes = 0L
-    def close(): Unit = if (bin.nonEmpty) {
-      bins += TextFilesPartition(bin.toArray); bin.clear(); binBytes = 0L
-    }
-    sorted.foreach { f =>
-      val w = f.len + opts.openCostInBytes
-      if (binBytes > 0 && binBytes + w > budget) close()
-      bin += f; binBytes += w
-    }
-    close()
-    bins.toArray
+    // parallelism; large totals cap at MaxPartitionBytes. The open
+    // cost weights each file so a million empty files still bin-pack.
+    import TextDirSource.{MaxPartitionBytes, OpenCostInBytes}
+    val weighted = sorted.iterator.map(_.len + OpenCostInBytes).sum
+    val budget = math.min(MaxPartitionBytes, math.max(OpenCostInBytes,
+      weighted / math.max(1, spark.sparkContext.defaultParallelism)))
+    TextDirSource.nextFit(sorted.toSeq, budget, OpenCostInBytes).toArray[InputPartition]
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -16,48 +16,6 @@ object bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Identical copy of `spark` — session state (conf, temp views,
-    * registered functions) is copied, the SparkContext and shared
-    * state (cache manager, so cached frames stay visible) are shared.
-    * `cloneSession` went `private[sql]` in Spark 4 alongside the
-    * Column constructor; `newSession()` is public but starts from
-    * DEFAULT session state, which would drop the caller's runtime
-    * conf. Used by `graft.functions.LoopPlanning` to scope a
-    * planning-conf pin to one loop without mutating the caller's
-    * session. */
-  def cloneSession(spark: SparkSession): SparkSession =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
-
-  /** Re-root `df` onto `target` (same SparkContext): a new Dataset
-    * over the SAME analyzed plan, planned and executed under the
-    * target session's conf. `Dataset.ofRows` went `private[sql]` with
-    * the rest of the constructors; the public alternative — a
-    * transient temp view — has a side effect that disqualifies it:
-    * `Catalog.dropTempView` un-caches the view's plan through the
-    * SHARED cache manager (exact sameResult match), so re-rooting a
-    * frame the caller had cached would silently evict that cache. */
-  def reroot(target: SparkSession, df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row]): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      target.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      df.queryExecution.analyzed)
-
-  /** Listener count on the context's shared event bus (`sc.listenerBus`
-    * is `private[spark]`). Test-side observability for the
-    * session-clone lifecycle soak (VERDICT r13 task 3): each
-    * [[cloneSession]] may wire per-session machinery onto the SHARED
-    * bus (Spark's `ExecutionListenerBus` pattern — weak-ref'd to the
-    * session and self-removing once it is collected), and the soak
-    * asserts the count returns to baseline instead of accreting one
-    * registration per pinned loop. */
-  def listenerBusCount(spark: SparkSession): Int =
-    spark.sparkContext.listenerBus.listeners.size()
-
-  /** Drain the shared event bus (self-removal of a dead clone's
-    * listener happens ON an event, so the soak pumps one query and
-    * waits here before counting). */
-  def waitListenerBusEmpty(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
-
   /** Register an expression builder on an EXISTING session (the
     * `spark.sql.extensions` conf only applies at session build time). */
   def registerFunction(

@@ -18,7 +18,8 @@ import graft.operators.TrainingData
   *     TakeOrderedAndProject with NO exchange before it (one pass,
   *     partial top-k per partition);
   *  4. determinism across reruns; zero-weight rows can never sample;
-  *     api.Graft.sampleByWeight same-core agreement. */
+  *     api.Graft.sampleByWeight same-core agreement;
+  *  5. the API's k bound (one k-row array cell in one task). */
 class SampleWeightedSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
@@ -84,5 +85,14 @@ class SampleWeightedSpec extends AnyFunSuite {
     val k1 = key(1L, 100L); val k4 = key(4L, 1L)
     val order = got.map(_._1).toSeq
     assert(order == (if (k1 > k4) Seq(1L, 4L) else Seq(4L, 1L)))
+  }
+
+  test("API bounds k: MaxSampleK builds, MaxSampleK + 1 raises naming the bound") {
+    import spark.implicits._
+    val hand = Seq((1L, 100L)).toDF("doc_id", "w")
+    assert(api.Graft.sampleByWeight(hand, k = TrainingData.MaxSampleK).columns.nonEmpty)
+    val e = intercept[IllegalArgumentException](
+      api.Graft.sampleByWeight(hand, k = TrainingData.MaxSampleK + 1))
+    assert(e.getMessage.contains(s"k <= ${TrainingData.MaxSampleK}"), e.getMessage)
   }
 }

@@ -33,11 +33,12 @@ class TextDirSourceSpec extends AnyFunSuite {
     opts.foldLeft(r)((acc, kv) => acc.option(kv._1, kv._2)).load()
   }
 
-  /** Deterministic packing for assertions: raw-bytes budget, no
-    * parallelism floor. */
-  private def packed(dir: Path, budget: Long) =
-    load(dir, "maxPartitionBytes" -> budget.toString,
-      "openCostInBytes" -> "0", "minPartitionNum" -> "1")
+  /** Deterministic packing for assertions: the planner's next-fit
+    * over in-memory slices at a raw-bytes budget, no open cost. */
+  private def packed(files: Seq[(String, Int)], budget: Long) =
+    sources.v2.TextDirSource.nextFit(
+      files.map { case (name, len) => sources.v2.TextFileSlice(name, len.toLong) },
+      budget, openCost = 0).map(_.files.map(_.path).toSeq)
 
   test("one row per file; content round-trips incl. newlines and quotes") {
     withDir { dir =>
@@ -60,14 +61,12 @@ class TextDirSourceSpec extends AnyFunSuite {
 
   test("default budget keeps tiny-file fixtures at per-file granularity, path-sorted") {
     withDir { dir =>
-      // openCostInBytes (4 KiB) dominates 5-byte files, so the budget
-      // still plans one partition per file here — tiny fixtures keep
-      // full parallelism; packing kicks in for real corpora below.
-      // minPartitionNum pinned: the default floor is
-      // defaultParallelism, which on a 1-core runner packs all 5 files
-      // into one bin and the assertion would be core-count-dependent.
+      // the 4 KiB open cost dominates 5-byte files: at the shared
+      // session's local[4], 5 x (5 B + 4 KiB) over 4 slots is a
+      // 5,126 B budget, which holds one file per bin — tiny fixtures
+      // keep full parallelism; packing kicks in for real corpora below.
       (1 to 5).foreach(i => Files.writeString(dir.resolve(s"f$i.txt"), s"doc $i"))
-      val df = load(dir, "minPartitionNum" -> "8")
+      val df = load(dir)
       assert(df.rdd.getNumPartitions == 5, "expected one partition per file")
       assert(df.select("path").as(org.apache.spark.sql.Encoders.STRING)
         .collect().toSeq == df.select("path").collect().map(_.getString(0)).toSeq.sorted)
@@ -75,26 +74,19 @@ class TextDirSourceSpec extends AnyFunSuite {
   }
 
   test("bin-packing: N small files collapse into <= ceil(bytes/budget) partitions") {
-    withDir { dir =>
-      (1 to 20).foreach(i => Files.writeString(dir.resolve(f"s$i%02d.txt"), "0123456789")) // 10 B each
-      val df = packed(dir, budget = 50)  // 200 B total / 50 B budget
-      assert(df.rdd.getNumPartitions == 4,
-        s"20x10B files under a 50B budget must pack to 4 partitions, got ${df.rdd.getNumPartitions}")
-      assert(df.count() == 20)
-    }
+    val bins = packed((1 to 20).map(i => f"s$i%02d.txt" -> 10), budget = 50) // 200 B / 50 B
+    assert(bins.length == 4,
+      s"20x10B files under a 50B budget must pack to 4 partitions, got ${bins.length}")
+    assert(bins.flatten == (1 to 20).map(i => f"s$i%02d.txt"))
   }
 
   test("bin-packing: a file bigger than the budget stays alone (documents never split)") {
-    withDir { dir =>
-      (1 to 10).foreach(i => Files.writeString(dir.resolve(f"a$i%02d.txt"), "0123456789"))
-      Files.writeString(dir.resolve("m_big.txt"), "x" * 120)  // > 50 B budget
-      val parts = packed(dir, budget = 50).select("path")
-        .rdd.map(_.getString(0)).glom().collect()
-      val withBig = parts.filter(_.exists(_.endsWith("m_big.txt")))
-      assert(withBig.length == 1 && withBig.head.length == 1,
-        s"oversized file must get its own partition: ${withBig.map(_.toSeq).toSeq}")
-      assert(parts.map(_.length).sum == 11)
-    }
+    val parts = packed((1 to 10).map(i => f"a$i%02d.txt" -> 10) :+ ("m_big.txt" -> 120),
+      budget = 50)  // m_big.txt > 50 B budget
+    val withBig = parts.filter(_.contains("m_big.txt"))
+    assert(withBig == Seq(Seq("m_big.txt")),
+      s"oversized file must get its own partition: $withBig")
+    assert(parts.map(_.length).sum == 11)
   }
 
   test("bin-packing at volume: 2000 tiny files plan ~parallelism partitions, not 2000") {
@@ -144,46 +136,10 @@ class TextDirSourceSpec extends AnyFunSuite {
       val single = load(dir.resolve("nested/b.txt")).collect()
       assert(single.length == 1 && single.head.getString(0) == s"file:$dir/nested/b.txt" &&
         single.head.getString(1) == "b")
-    }
-  }
-
-  test("pathGlobFilter filters by file name") {
-    withDir { dir =>
-      Files.writeString(dir.resolve("keep.txt"), "k")
-      Files.writeString(dir.resolve("skip.md"), "s")
-      val got = load(dir, "pathGlobFilter" -> "*.txt").select("path").collect().map(_.getString(0))
-      assert(got.length == 1 && got.head.endsWith("keep.txt"))
-    }
-  }
-
-  test("globToRegex: hostile globs are literals, never PatternSyntaxException") {
-    import graft.sources.v2.TextDirSource.globToRegex
-    import java.util.regex.Pattern
-    // literal ^ outside a class must match, not anchor
-    assert(Pattern.matches(globToRegex("a^b.txt"), "a^b.txt"))
-    // unbalanced [ is a literal bracket, and still compiles
-    assert(Pattern.matches(globToRegex("a[b.txt"), "a[b.txt"))
-    assert(!Pattern.matches(globToRegex("a[b.txt"), "ab.txt"))
-    // empty class is a literal bracket pair
-    assert(Pattern.matches(globToRegex("a[].txt"), "a[].txt"))
-    // stray ] and - outside a class are literals
-    assert(Pattern.matches(globToRegex("a]b-c.txt"), "a]b-c.txt"))
-    // real classes still work: set, range, negation (both spellings)
-    assert(Pattern.matches(globToRegex("f[abc].txt"), "fb.txt"))
-    assert(Pattern.matches(globToRegex("f[a-z]*.txt"), "fqueue.txt"))
-    assert(!Pattern.matches(globToRegex("f[!0-9].txt"), "f7.txt"))
-    assert(Pattern.matches(globToRegex("f[^0-9].txt"), "fx.txt"))
-    // * and ? never cross a path separator
-    assert(!Pattern.matches(globToRegex("*.txt"), "sub/a.txt"))
-  }
-
-  test("hostile pathGlobFilter end-to-end: lone [ filters literally, no crash") {
-    withDir { dir =>
-      Files.writeString(dir.resolve("a[b.txt"), "x")
-      Files.writeString(dir.resolve("ab.txt"), "y")
-      val got = load(dir, "pathGlobFilter" -> "a[b.txt").select("path")
-        .collect().map(_.getString(0))
-      assert(got.length == 1 && got.head.endsWith("a[b.txt"))
+      // a removed option raises, naming its replacement — never dropped silently
+      val removed = intercept[IllegalArgumentException](load(dir, "pathGlobFilter" -> "*.txt"))
+      assert(removed.getMessage.contains("pathGlobFilter") &&
+        removed.getMessage.contains("glob in `path`"), removed.getMessage)
     }
   }
 

@@ -4,7 +4,9 @@
 Replicates the driver's t2 correctness gate locally: reads each
 `<out>/<name>` parquet produced by `graft.Verify`, runs the matching
 DuckDB oracle SQL from `<out>/oracle_sql.json` against the same
-parquet tables, sorts columns by name, and compares values.
+parquet tables, sorts columns by name, and compares values. Every
+operator listed in `<out>/verify_failures.json` (its Spark run raised)
+counts as a FAIL.
 
 Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir>
 """
@@ -33,11 +35,19 @@ def main(sf_dir: str, out_dir: str) -> int:
 
     import glob
     import os
-    names = sorted(
+    failures = {}
+    if os.path.exists(f"{out_dir}/verify_failures.json"):
+        with open(f"{out_dir}/verify_failures.json") as f:
+            failures = json.load(f)
+    names = sorted(set(
         os.path.basename(p) for p in glob.glob(f"{out_dir}/*")
-        if os.path.isdir(p))
+        if os.path.isdir(p)) | set(failures))
     n_fail = 0
     for name in names:
+        if name in failures:
+            print(f"FAIL  {name}: spark run failed: {failures[name]}")
+            n_fail += 1
+            continue
         try:
             got = norm(pd.read_parquet(f"{out_dir}/{name}"))
         except Exception as e:
