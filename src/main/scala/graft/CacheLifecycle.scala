@@ -10,12 +10,14 @@ import org.apache.spark.sql.DataFrame
   * so CacheManager's plan-keyed dedup can't collapse the entries).
   *
   * The GRADED operator paths do NOT wire this listener: their
-  * persisted tails stay cached until the caller clears the cache
-  * (`operator_session` in `perfbench` reads `cache.residual_mb` > 0
-  * after each request; `Bench` and `Verify` clear the SQL cache before
-  * every query). Releasing them when their query completes is ROADMAP
-  * direction 4(c). Graded paths drop the `Managed` handle; public
-  * APIs wrap with this helper.
+  * persisted intermediates and [[OpQuery.gradedSort]] tails stay
+  * cached until the caller clears the cache (`operator_session` in
+  * `perfbench` reads `cache.residual_mb` > 0 after each request;
+  * `Bench` and `Verify` clear the SQL cache before every query).
+  * Releasing them when their query completes is ROADMAP direction
+  * 4(c). Graded paths drop the `Managed` handle; public APIs wrap
+  * with this helper, including the APIs that end in `gradedSort`
+  * (they release the sorted frame's persisted child).
   *
   * Semantics: the first materialization of the result (or any frame
   * derived from it) runs on the warm cache; the release fires after

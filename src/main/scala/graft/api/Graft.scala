@@ -75,14 +75,18 @@ object Graft {
     * component` rows (or anti-join the rest away) to dedup. `df` needs
     * a unique numeric id in `idCol` and the text in `textCol`; an id
     * that does not cast to long fails the job (a silent null would
-    * instead report "no duplicates" on a corpus full of them). */
+    * instead report "no duplicates" on a corpus full of them). The
+    * result releases its cached tail after the first action, so a
+    * second action recomputes. */
   def nearDupClusters(df: DataFrame, idCol: Column, textCol: Column): DataFrame = {
     val idType = df.select(idCol).schema.head.dataType
-    graft.operators.LlmPipeline.connectedComponents(
+    val t = graft.operators.LlmPipeline.connectedComponents(
       graft.operators.LlmPipeline.minhashPairsFor(
         df.select(validatedId(idCol, idType, "nearDupClusters").as("doc_id"),
           textCol.as("text"))))
       .withColumnRenamed("doc_id", "id")
+    graft.CacheLifecycle.selfReleasing(
+      t.transform(graft.OpQuery.gradedSort("id")), () => t.unpersist())
   }
 
   /** [[nearDupClusters]] plus the keep-best-by-quality policy — the
@@ -523,7 +527,9 @@ object Graft {
     * K ≈ |history| / target cell occupancy so per-probe work stays
     * flat as the corpus grows (train with KMeansLite or any external
     * trainer). `history`/`batch` need `(idCol, embCol)`; ids must
-    * cast to long losslessly (same guard as [[nearDupClusters]]). */
+    * cast to long losslessly (same guard as [[nearDupClusters]]). The
+    * result releases its cached tail after the first action, so a
+    * second action recomputes. */
   def annProbe(history: DataFrame, batch: DataFrame, centroids: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding",
       topK: Int = 3): DataFrame = {
@@ -538,7 +544,9 @@ object Graft {
       validatedId(col("c_id"), centroids.schema("c_id").dataType, "annProbe")
         .as("c_id"),
       transform(col("centroid"), x => x.cast("double")).as("ce"))
-    graft.operators.TrainingData.annProbeWith(prep(history), prep(batch), cents, topK)
+    val t = graft.operators.TrainingData.annProbeWith(prep(history), prep(batch), cents, topK)
+    graft.CacheLifecycle.selfReleasing(
+      t.transform(graft.OpQuery.gradedSort("batch_id", "rank")), () => t.unpersist())
   }
 
   /** [[annProbe]] with a HIERARCHICAL two-level coarse assign — the
@@ -562,7 +570,9 @@ object Graft {
     * levels with KMeansLite or any external trainer — or take every
     * √K-th trained centroid as its own super, the stride rule). Both
     * codebooks must individually stay broadcastable; the child→super
-    * map is codebook-sized (K rows) and computed once per call. */
+    * map is codebook-sized (K rows) and computed once per call. The
+    * result releases its cached tail after the first action, as
+    * [[annProbe]]'s does. */
   def annProbeHier(history: DataFrame, batch: DataFrame,
       centroids: DataFrame, superCentroids: DataFrame,
       idCol: String = "vec_id", embCol: String = "embedding",
@@ -577,8 +587,10 @@ object Graft {
       validatedId(col("c_id"), df.schema("c_id").dataType, "annProbeHier")
         .as("c_id"),
       transform(col("centroid"), x => x.cast("double")).as("ce"))
-    graft.operators.TrainingData.annProbeHierWith(prep(history), prep(batch),
+    val t = graft.operators.TrainingData.annProbeHierWith(prep(history), prep(batch),
       prepC(centroids), prepC(superCentroids), superProbe, topK)
+    graft.CacheLifecycle.selfReleasing(
+      t.transform(graft.OpQuery.gradedSort("batch_id", "rank")), () => t.unpersist())
   }
 
   /** Sliding-window token chunking for any corpus — the general form
@@ -639,7 +651,7 @@ object Graft {
 
   /** Block-level dedup over content-defined chunks — the general form
     * of the graded `op_dedup_blocks` (same core,
-    * [[graft.operators.TrainingData.blockDedupWith]]; Manber 1994 §3 —
+    * [[graft.operators.TrainingData.blockDedupManaged]]; Manber 1994 §3 —
     * the cross-document shared-region detection CDC chunking exists
     * for). Chunks each document with [[chunkContentDefined]]'s rule,
     * calls a block duplicated when its `chunk_md5` appears in ≥ 2
@@ -658,8 +670,8 @@ object Graft {
       gramChars: Int = graft.operators.TrainingData.CdcGram,
       divisor: Int = graft.operators.TrainingData.CdcDivisor,
       rem: Int = graft.operators.TrainingData.CdcRem): DataFrame =
-    graft.operators.TrainingData.blockDedupWith(
-      chunkContentDefined(df, idCol, textCol, gramChars, divisor, rem))
+    graft.CacheLifecycle.selfReleasing(graft.operators.TrainingData.blockDedupManaged(
+      chunkContentDefined(df, idCol, textCol, gramChars, divisor, rem)))
 
   /** Block-level dedup REWRITE — the transform leg of [[dedupBlocks]]
     * (same chunking rule, graded as `op_dedup_blocks_rewrite`): every
@@ -687,10 +699,10 @@ object Graft {
     require(divisor >= 2 && rem >= 0 && rem < divisor,
       s"dedupBlocksRewrite: need divisor >= 2 and 0 <= rem < divisor " +
         s"(got $divisor, $rem)")
-    graft.operators.TrainingData.blockRewriteWith(
+    graft.CacheLifecycle.selfReleasing(graft.operators.TrainingData.blockRewriteManaged(
       graft.operators.TrainingData.chunkCdcWith(
         df.select(col(idCol).as("doc_id"), col(textCol).as("text")),
-        gramChars, divisor, rem, withText = true))
+        gramChars, divisor, rem, withText = true)))
   }
 
   /** Exact repeated-span detection for any corpus — the general form
@@ -717,7 +729,7 @@ object Graft {
     val (result, release) = graft.operators.TrainingData.repeatedSpansManaged(
       df.select(col(idCol).as("doc_id"), col(textCol).as("text")),
       gramTokens, hashGrams = true)
-    selfReleasing(result, release)
+    graft.CacheLifecycle.selfReleasing(result, release)
   }
 
   /** CCNet perplexity bucketing for any corpus (Wenzek et al. 2019,
@@ -753,7 +765,7 @@ object Graft {
     val (result, release) = graft.operators.Mining.perplexityBucketsWith(
       df.select(col(idCol).as("doc_id"), col(textCol).as("text")),
       n => ceil(n * tailFraction), n => ceil(n * headFraction))
-    selfReleasing(result, release)
+    graft.CacheLifecycle.selfReleasing(result, release)
   }
 
   /** The Gopher rule-based quality gate for any corpus — the general
@@ -866,7 +878,7 @@ object Graft {
     val (result, release) = graft.operators.CorpusStats.bpeSegmentWith(
       df.select(validatedId(col(idCol), idT, "bpeSegmentDocs").as("doc_id"),
         col(textCol).as("text")), merges)
-    selfReleasing(result, release)
+    graft.CacheLifecycle.selfReleasing(result, release)
   }
 
   /** Count-Min frequency estimates for caller candidates over an item
@@ -909,7 +921,7 @@ object Graft {
       s"collocations: need minCount >= 1 and top >= 1 (got $minCount, $top)")
     val (result, release) = graft.operators.CorpusStats.statsPmiWith(
       df.select(col(textCol).as("text")), minCount, top)
-    selfReleasing(result, release)
+    graft.CacheLifecycle.selfReleasing(result, release)
   }
 
   /** Bloom-filter decontamination of a training corpus against an eval
@@ -996,7 +1008,7 @@ object Graft {
       df.withColumn("doc_id", validatedId(col(idCol), idT, "dsirWeights"))
         .withColumn("text", col(textCol)),
       isTarget, n => ceil(n * keepFraction))
-    selfReleasing(result, release)
+    graft.CacheLifecycle.selfReleasing(result, release)
   }
 
   /** Train the DSIR model batch-side and export it as bounded literals
@@ -1091,7 +1103,7 @@ object Graft {
     val (result, release) = graft.operators.LlmPipeline.minhashEstWith(
       df.select(validatedId(col(idCol), idT, "minhashAudit").as("doc_id"),
         col(textCol).as("text")))
-    selfReleasing(result, release)
+    graft.CacheLifecycle.selfReleasing(result, release)
   }
 
   /** Greedy k-center coreset selection over an embedding column — the
@@ -1210,16 +1222,8 @@ object Graft {
   def ingestTriage(history: DataFrame, batch: DataFrame,
       idCol: String = "id", textCol: String = "text"): DataFrame = {
     val (result, release) = ingestTriageManaged(history, batch, idCol, textCol)
-    selfReleasing(result, release)
-  }
-
-  /** Cache-lifecycle helper for the caching APIs ([[ingestTriage]],
-    * [[perplexityBuckets]]): the shared [[graft.CacheLifecycle]]
-    * one-shot listener — `release()` fires after the first terminal
-    * action whose plan reads `result`, so the default API never leaks
-    * its cached intermediates into a long-lived session. */
-  private def selfReleasing(result: DataFrame, release: () => Unit): DataFrame =
     graft.CacheLifecycle.selfReleasing(result, release)
+  }
 
   /** [[ingestTriage]] plus a release handle: `_2()` unpersists the
     * three cached triage frames backing the result. Call it AFTER the

@@ -67,7 +67,7 @@ object CorpusStats {
         .select((col("doc_id") * 4 + 3).as("doc_id"),
           array_join(filter(toks(col("text")),
             t => !t.isin(GopherStops: _*)), " ").as("text")))
-    gopherWith(corpus).persist().orderBy("doc_id")
+    gopherWith(corpus).transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** Core behind [[filterGopher]] and `api.Graft.gopherRules`: the rule
@@ -136,7 +136,7 @@ object CorpusStats {
     * size; the graded ORDER BY is the only total sort. */
   def fingerprintWinnow(sp: SparkSession, dir: String): DataFrame =
     winnowWith(docs(sp, dir), WinnowGram, WinnowWindow)
-      .persist().orderBy("doc_id", "pos")
+      .transform(OpQuery.gradedSort("doc_id", "pos"))
 
   /** Core behind [[fingerprintWinnow]] and `api.Graft.winnowFingerprints`:
     * caller-sized gram/window over any `corpus(doc_id, text)`, without
@@ -305,10 +305,6 @@ object CorpusStats {
     * small vocab and shuffles a huge one) and a per-doc rollup with
     * map-side partials. */
   def bpeSegment(sp: SparkSession, dir: String): DataFrame =
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps AND with
-    // op_pack_sequences_bpe (r18 ADVICE adjudicated r19, see
-    // TrainingData.repeatedSpansWith)
     bpeSegmentWith(docs(sp, dir), BpeMerges)._1.orderBy("doc_id")
 
   /** Core behind [[bpeSegment]], [[packSequencesBpe]] and
@@ -429,15 +425,13 @@ object CorpusStats {
     * the identity element of the running offset). */
   def packSequencesBpe(sp: SparkSession, dir: String): DataFrame = {
     val corpus = docs(sp, dir)
-    // graded op: release handle dropped (process-scoped vocab cache,
-    // the B46 precedent — shared with op_bpe_segment's run)
     val (seg, _) = bpeSegmentWith(
       corpus.select(col("doc_id"), col("text")), BpeMerges)
     val counted = corpus.select(col("doc_id"), col("source"))
       .join(seg.select(col("doc_id"), col("n_bpe_units").as("n_tok")),
         Seq("doc_id"), "left")
       .withColumn("n_tok", coalesce(col("n_tok"), lit(0L)))
-    TrainingData.packOffsets(counted).persist().orderBy("doc_id")
+    TrainingData.packOffsets(counted).transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** One unrolled oracle merge block: pairs of `s${k-1}` → top pair
@@ -643,9 +637,6 @@ object CorpusStats {
     * itself (vocabulary-sized aggregates — the corpus is never read
     * twice); top-K via TakeOrderedAndProject, never a global sort. */
   def statsPmi(sp: SparkSession, dir: String): DataFrame =
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps (r18 ADVICE
-    // adjudicated r19, see TrainingData.repeatedSpansWith)
     statsPmiWith(docs(sp, dir).select(col("text")), PmiMinCount, PmiTop)._1
 
   /** Core behind [[statsPmi]] and `api.Graft.collocations`. Returns
@@ -706,7 +697,7 @@ object CorpusStats {
       .union(base.filter(col("doc_id") % 13 === 0)
         .select((col("doc_id") * 2 + 1).as("doc_id"),
           repeat(lit("z"), length(col("text"))).as("text")))
-    textEntropyOf(corpus).persist().orderBy("doc_id")
+    textEntropyOf(corpus).transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** Core behind [[textEntropy]] and `api.Graft.entropyStats`: the

@@ -94,14 +94,13 @@ object Curation {
     // exchange's bounds sampling re-executes its child, and here the
     // child is the WHOLE probe above the one text exchange — shingle,
     // hash, mask test, rollup all ran twice per execution. Doc-sized.
-    bloomWith(train, evalGrams).persist().orderBy("doc_id")
+    bloomWith(train, evalGrams).transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** Core behind [[sketchBloom]] and `api.Graft.bloomContaminate`: the
     * m-bit filter build + k-bit probe + 20 %-bar doc rollup over any
     * `train(doc_id, text)` against any `evalGrams(sh)`, without the
-    * graded total sort. Graded path drops the release handle
-    * (plan-keyed cache); the public API wires the listener. */
+    * graded total sort. */
   private[graft] def bloomWith(train: DataFrame, evalGrams: DataFrame): DataFrame =
     bloomManaged(train, evalGrams)._1
 
@@ -231,7 +230,7 @@ object Curation {
     // persisted before the graded total sort (r22): the probe is a
     // stateless map chain with no exchange below the sort — the range
     // sampling re-executed the shingle+hash+mask pass twice. Doc-sized.
-    bloomProbePlan(train, bloomMaskOf(evalGrams)).persist().orderBy("doc_id")
+    bloomProbePlan(train, bloomMaskOf(evalGrams)).transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- B69: DSIR importance weights ----------------------------------------
@@ -269,13 +268,8 @@ object Curation {
     * range, not the corpus), exactly like B63 — one integer threshold
     * broadcasts back; never a global sort, never a rank. */
   def dsirWeights(sp: SparkSession, dir: String): DataFrame =
-    // graded path: release handle deliberately dropped — the cache is
-    // plan-keyed (sameResult canonicalization), so every graded rep
-    // shares ONE process-scoped entry; the self-releasing listener
-    // belongs on the public API where per-call corpora differ (r18
-    // ADVICE adjudicated r19, see repeatedSpansWith)
     dsirWith(docs(sp, dir), col("source") === DsirTargetSource)._1
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   /** Core behind [[dsirWeights]] and `api.Graft.dsirWeights`: feature
     * hash → smoothed log-ratio table → per-doc mean score →
@@ -440,7 +434,7 @@ object Curation {
     // range exchange's bounds sampling re-executed the whole tokenize +
     // hash + fold pass — the op's dominant cost — twice per execution.
     // Skinny scores frame, doc-sized.
-    dsirStreamPlan(docs(sp, dir), lam, t).persist().orderBy("doc_id")
+    dsirStreamPlan(docs(sp, dir), lam, t).transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- B70: exact line-level dedup with rewrite ----------------------------
@@ -524,8 +518,7 @@ object Curation {
     dedupLinesManaged(corpus, lineTokens, minTokens, minDocs, hashLines)._1
 
   /** [[dedupLinesWith]] plus the release handle for the persisted line
-    * frame (graded path drops it — plan-keyed cache; the public API
-    * wires the self-releasing listener). */
+    * frame. */
   private[graft] def dedupLinesManaged(corpus: DataFrame,
       lineTokens: Int = LineTokens, minTokens: Int = LineMinTokens,
       minDocs: Int = LineMinDocs,
@@ -638,8 +631,7 @@ object Curation {
     statsHeapsManaged(corpus, span)._1
 
   /** [[statsHeapsWith]] plus the release handle for the persisted
-    * bucket frame (graded path drops it — plan-keyed cache; the public
-    * API wires the self-releasing listener). */
+    * bucket frame. */
   private[graft] def statsHeapsManaged(corpus: DataFrame,
       span: Int = HeapsSpan): (DataFrame, () => Unit) = {
     val dt = corpus.select(col("doc_id"), explode(toks(col("text"))).as("t"))
@@ -845,9 +837,7 @@ object Curation {
   }
 
   /** Core behind [[ngramNovelty]] and `api.Graft.noveltyScores` over
-    * any `corpus(doc_id, text)`; docs too short to shingle drop.
-    * Graded path drops the release handle (plan-keyed cache); the
-    * public API wires the self-releasing listener. */
+    * any `corpus(doc_id, text)`; docs too short to shingle drop. */
   private[graft] def ngramNoveltyOf(corpus: DataFrame): DataFrame =
     ngramNoveltyManaged(corpus)._1
 

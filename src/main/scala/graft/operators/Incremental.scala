@@ -115,7 +115,7 @@ object Incremental {
           coalesce(col("entry_id"), lit(-1L))).otherwise(lit(-1L)).as("entry_id"),
         coalesce(col("nn_hist"), lit(-1L)).as("nn_hist"),
         coalesce(col("nn_score"), lit(-2.0)).as("nn_score"))
-      .persist().orderBy("batch_id")
+      .transform(OpQuery.gradedSort("batch_id"))
   }
 
   /** Stages 1–3 of the ingest triage over any `(doc_id, text)` frames:

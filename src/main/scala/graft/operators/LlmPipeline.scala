@@ -80,7 +80,7 @@ object LlmPipeline {
       .select(col("doc_id"),
         col("hist_id").isNotNull.as("dup_of_history"),
         coalesce(col("hist_id"), lit(-1L)).as("hist_id"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- B55: index update (the write half of incremental dedup) -------------
@@ -118,7 +118,7 @@ object LlmPipeline {
       .groupBy("key").agg(min("doc_id").as("entry_id"))
     history.select(col("key"), col("hist_id").as("entry_id"), lit(false).as("is_new"))
       .union(novel.select(col("key"), col("entry_id"), lit(true).as("is_new")))
-      .persist().orderBy("key")
+      .transform(OpQuery.gradedSort("key"))
   }
 
   // ---- B57: deterministic train/val/test holdout split ---------------------
@@ -286,7 +286,7 @@ object LlmPipeline {
     minhashBanded(batch)
       .join(minhashHistoryIndex(history), Seq("band_id", "band_key"))
       .select(col("doc_id").as("batch_id"), col("hist_id")).distinct()
-      .persist().orderBy("batch_id", "hist_id")
+      .transform(OpQuery.gradedSort("batch_id", "hist_id"))
   }
 
   /** DuckDB oracle fragment: the CTE chain `shingled → hashed → sigs →
@@ -460,12 +460,10 @@ object LlmPipeline {
     * band buckets, the signature compare, the distinct-gram join and
     * the per-doc counts (r18; the r16 formulation re-derived it five
     * times — 5.7 s vs a 2.75 s quiet floor at sf0.1, the board's one
-    * `weak`). The graded path drops the release handle — the cache is
-    * plan-keyed, so every graded rep shares ONE process-scoped entry
-    * (r18 ADVICE adjudicated r19, see TrainingData.repeatedSpansWith);
-    * `api.Graft.minhashAudit` wires the self-releasing listener. */
+    * `weak`). `api.Graft.minhashAudit` wires the self-releasing
+    * listener. */
   def minhashEst(sp: SparkSession, dir: String): DataFrame =
-    minhashEstWith(minhashCorpus(sp, dir))._1.persist().orderBy("doc_a", "doc_b")
+    minhashEstWith(minhashCorpus(sp, dir))._1.transform(OpQuery.gradedSort("doc_a", "doc_b"))
 
   /** Core behind [[minhashEst]] and `api.Graft.minhashAudit`: the
     * estimator-vs-exact audit over ANY `corpus(doc_id, text)`, without
@@ -591,7 +589,7 @@ object LlmPipeline {
     * materialized and the previous one unpersisted, so peak footprint
     * is 2 label sets + the edge list. */
   def dedupCc(sp: SparkSession, dir: String): DataFrame =
-    connectedComponents(minhashPairs(sp, dir))
+    connectedComponents(minhashPairs(sp, dir)).transform(OpQuery.gradedSort("doc_id"))
 
   /** B85 — `op_dedup_keep_best`: canonical selection BY QUALITY — the
     * duplicate-cluster policy real curation pipelines run where
@@ -624,11 +622,12 @@ object LlmPipeline {
       .withColumn("kept", row_number().over(w) === 1)
       .select(col("doc_id"), col("component"), col("csize"),
         col("logit"), col("kept"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** The closure itself, over any (doc_a, doc_b) pair frame — see
-    * [[dedupCc]] for the algorithm and scale notes. */
+    * [[dedupCc]] for the algorithm and scale notes. Unsorted: the
+    * graded builders apply [[OpQuery.gradedSort]]. */
   private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
     // persist the pair list BEFORE mirroring it (r22 — the pagerank
     // pairs0 repair, guide §2.4): `pairs` appears in BOTH union arms
@@ -727,7 +726,6 @@ object LlmPipeline {
     val sizes = labels.groupBy("comp").agg(count(lit(1)).as("csize"))
     labels.join(sizes, "comp")
       .select(col("id").as("doc_id"), col("comp").as("component"), col("csize"))
-      .persist().orderBy("doc_id")
     }
 
   // ---- B18: cosine top-k similarity ----------------------------------------

@@ -60,7 +60,7 @@ object Mining {
       .select(col("vec_id"),
         (-col("best.negid")).cast("int").as("cell"),
         round(col("best.cos"), 4).as("cos4"))
-      .persist().orderBy("vec_id")
+      .transform(OpQuery.gradedSort("vec_id"))
   }
 
   /** DuckDB cosine between a vector column and a centroid list column. */
@@ -634,13 +634,8 @@ object Mining {
     * percentile filter should run: histogram, threshold, map-side
     * filter; never a global sort. */
   def perplexityFilter(sp: SparkSession, dir: String): DataFrame =
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps (r18 ADVICE
-    // adjudicated r19: the listener here made every rep after the
-    // first recompute cold, a measured 2.9x regression; see
-    // TrainingData.repeatedSpansWith)
     perplexityBucketsWith(docs(sp, dir),
-      n => ceil(n / 3.0), n => ceil(n * 2 / 3.0))._1.persist().orderBy("doc_id")
+      n => ceil(n / 3.0), n => ceil(n * 2 / 3.0))._1.transform(OpQuery.gradedSort("doc_id"))
 
   /** Core behind [[perplexityFilter]] and `api.Graft.perplexityBuckets`:
     * the same histogram → integer-threshold → map-side-bucket plan
@@ -864,13 +859,12 @@ object Mining {
         concat(col("text"),
           repeat(concat(lit(" uq"), col("doc_id").cast("string")), 4)))
         .otherwise(col("text")).as("text"))
-    tfidfTopkOf(corpus, TfidfTopK).persist().orderBy("doc_id", "rnk")
+    tfidfTopkOf(corpus, TfidfTopK).transform(OpQuery.gradedSort("doc_id", "rnk"))
   }
 
   /** Core behind [[tfidfTopk]] and `api.Graft.keywords`: top-k terms
     * per doc over any `corpus(doc_id, text)`, without the graded
-    * total sort. Graded path drops the release handle (plan-keyed
-    * cache); the public API wires the self-releasing listener. */
+    * total sort. */
   private[graft] def tfidfTopkOf(corpus: DataFrame, k: Int): DataFrame =
     tfidfTopkManaged(corpus, k)._1
 
@@ -959,10 +953,7 @@ object Mining {
   /** Core behind [[fuzzyJoin]] and `api.Graft.fuzzyJoin`: dist-≤-1
     * pairs over any `corpus(doc_id, key)`, without the graded total
     * sort. Deletion-neighborhood is exact for distance 1; larger
-    * radii need d-deletion neighborhoods (compose upstream). Graded
-    * path drops the release handle (plan-keyed cache, the
-    * repeatedSpansWith precedent); the public API wires the
-    * self-releasing listener. */
+    * radii need d-deletion neighborhoods (compose upstream). */
   private[graft] def fuzzyJoinOf(corpus: DataFrame, cap: Int): DataFrame =
     fuzzyJoinManaged(corpus, cap)._1
 

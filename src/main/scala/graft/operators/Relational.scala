@@ -40,7 +40,7 @@ object Relational {
         col("l_discount") >= 0.05 && col("l_quantity") < 25)
       .select(col("l_orderkey"), col("l_linenumber"),
         round(revenue, 4).as("revenue"))
-      .persist().orderBy("l_orderkey", "l_linenumber", "revenue")
+      .transform(OpQuery.gradedSort("l_orderkey", "l_linenumber", "revenue"))
 
   // ---- B3: broadcast join through the dimension chain ---------------------
   def joinBroadcast(s: SparkSession, dir: String): DataFrame =
@@ -133,7 +133,7 @@ object Relational {
         date_format(col("tsec"), "yyyy-MM-dd HH:mm:ss").as("tsf"), col("value"),
         date_format(col("click_tsec"), "yyyy-MM-dd HH:mm:ss").as("click_tsf"),
         col("click_value"))
-      .persist().orderBy("event_id")
+      .transform(OpQuery.gradedSort("event_id"))
   }
 
   // ---- B7: hash aggregate (TPC-H Q1 shape; partial agg before shuffle) -----
@@ -274,7 +274,7 @@ object Relational {
         date_format(col("tsec"), "yyyy-MM-dd HH:mm:ss").as("tsf"),
         count(lit(1)).over(w).as("n_1h"),
         round(sum("value").over(w), 2).as("sum_1h"))
-      .persist().orderBy("event_type", "tsf", "event_id")
+      .transform(OpQuery.gradedSort("event_type", "tsf", "event_id"))
   }
 
   // ---- B14b: pivot / unpivot (reshape) ---------------------------------------
@@ -383,7 +383,7 @@ object Relational {
         date_format(col("h"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         coalesce(col("n_events"), lit(0L)).as("n_events"),
         coalesce(col("sum_value"), lit(0.0)).as("sum_value"))
-      .persist().orderBy("event_type", "hour")
+      .transform(OpQuery.gradedSort("event_type", "hour"))
   }
 
   // ---- B10b: quantiles (exact + sketch accuracy contract) -------------------
@@ -435,7 +435,7 @@ object Relational {
       .withColumn("running_spend",
         round(sum("o_totalprice").over(w.rowsBetween(Window.unboundedPreceding, 0)), 2))
       .select("o_custkey", "o_orderkey", "prev_price", "running_spend")
-      .persist().orderBy("o_custkey", "o_orderkey")
+      .transform(OpQuery.gradedSort("o_custkey", "o_orderkey"))
   }
 
   // ---- B13: global top-k (TakeOrderedAndProject — no full sort at scale) ----
@@ -666,9 +666,10 @@ object Relational {
         when(col("o_totalprice") > 200000, "big")
           .when(col("o_totalprice") > 100000, "mid")
           .otherwise("small").as("bucket"))
-      // NO tail persist here (r22, measured): the output is 12 wide
-      // columns per orders row, so caching it costs more than
-      // re-running the cheap scalar projection the sort resample pays
+      // a bare orderBy, NOT OpQuery.gradedSort (r22, measured): the
+      // output is 12 wide columns per orders row, so caching it costs
+      // more than re-running the cheap scalar projection the sort
+      // resample pays
       .orderBy("o_orderkey")
 
   // -------------------------------------------------------------------------
@@ -769,7 +770,7 @@ object Relational {
         .select(col("key"), col("bal").as("nbal")))
       .union(base.filter(col("key") % 11 === 0)
         .select((col("key") + 1000000000L).as("key"), lit(5000L).as("nbal")))
-    scd2MergeOf(base, batch).persist().orderBy("key", "ver")
+    scd2MergeOf(base, batch).transform(OpQuery.gradedSort("key", "ver"))
   }
 
   /** Core behind [[scd2Merge]] and `api.Graft.scd2Merge` over any
@@ -842,7 +843,7 @@ object Relational {
       .select(date_format(col("fday"), "yyyy-MM-dd").as("cohort"),
         col("day_offset"), col("n_active"), col("n_cohort"),
         round(col("n_active").cast("double") / col("n_cohort"), 6).as("retention"))
-      .persist().orderBy("cohort", "day_offset")
+      .transform(OpQuery.gradedSort("cohort", "day_offset"))
   }
 
   // ---- B102: join-key skew diagnostics ------------------------------------------

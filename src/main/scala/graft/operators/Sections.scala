@@ -62,7 +62,7 @@ object Sections {
   def dispatchFormat(sp: SparkSession, dir: String): DataFrame =
     docs(sp, dir)
       .select(col("doc_id"), TextSemantics.dispatchFormat(a27Doc).as("fmt"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A28: merge sections -------------------------------------------------
 

@@ -412,7 +412,7 @@ object Streaming {
       .select((col("doc_id") * 2).as("doc_id"), col("text"))
       .union(d.filter(col("doc_id") % 8 === 0)
         .select((col("doc_id") * 2 + 1).as("doc_id"), col("text")))
-    staticJoinPlan(batch, historyIndex(sp, dir)).persist().orderBy("doc_id")
+    staticJoinPlan(batch, historyIndex(sp, dir)).transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** Batch grade of [[minhashProbePlan]] on B56's exact corpus split
@@ -429,7 +429,7 @@ object Streaming {
         .select((col("doc_id") * 2 + 1).as("doc_id"),
           concat(col("text"), lit(" extraneous")).as("text")))
     minhashProbePlan(batch, LlmPipeline.minhashHistoryIndex(history))
-      .persist().orderBy("batch_id", "band_id", "hist_id")
+      .transform(OpQuery.gradedSort("batch_id", "band_id", "hist_id"))
   }
 
   /** Batch grade of [[chunkCdcGatePlan]] on the B54/B56s corpus split
@@ -447,7 +447,7 @@ object Streaming {
         .select((col("doc_id") * 2 + 1).as("doc_id"),
           concat(lit("injected preamble sentence "), col("text")).as("text")))
     chunkCdcGatePlan(batch, cdcHistoryKeys(history))
-      .persist().orderBy("doc_id", "chunk_id")
+      .transform(OpQuery.gradedSort("doc_id", "chunk_id"))
   }
 
   /** Batch grade of [[ingestBlocksPlan]] on the B54/B56s corpus split
@@ -495,7 +495,7 @@ object Streaming {
 
   def streamSession(sp: SparkSession, dir: String): DataFrame =
     sessionPlan(Tables.events(sp, dir), streaming = false)
-      .persist().orderBy("user_id", "sess_start")
+      .transform(OpQuery.gradedSort("user_id", "sess_start"))
 
   /** Input doubled with late copies (+10 min, value+1) so the dedup
     * provably drops rows instead of passing everything through. */
@@ -508,11 +508,11 @@ object Streaming {
 
   def streamDedupLate(sp: SparkSession, dir: String): DataFrame =
     dedupLatePlan(doubledEvents(sp, dir), streaming = false)
-      .persist().orderBy("event_id")
+      .transform(OpQuery.gradedSort("event_id"))
 
   def streamCustomState(sp: SparkSession, dir: String): DataFrame =
     runningStatePlan(Tables.events(sp, dir), streaming = false)
-      .persist().orderBy("user_id", "seq")
+      .transform(OpQuery.gradedSort("user_id", "seq"))
 
   /** Batch grade of [[domainGatePlan]] on the B90 skew corpus (docs
     * with id % 3 ≠ 0 re-sourced to one mega-domain): the hot domain

@@ -126,7 +126,7 @@ object TextEtl {
       .filter(col("path").endsWith(".txt"))
       .withColumn("doc_id", regexp_extract(col("path"), "(\\d+)\\.txt$", 1).cast("long"))
       .select(col("doc_id"), col("length").cast("int").as("text_len"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** Publish a fully-written panel dir by atomic rename. Losing the
@@ -177,7 +177,7 @@ object TextEtl {
       .filter(col("path").endsWith(".txt"))
       .withColumn("doc_id", regexp_extract(col("path"), "(\\d+)\\.txt$", 1).cast("long"))
       .select(col("doc_id"), col("length").cast("int").as("text_len"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** A2 — JSON sink projection (`script.py:572-573`): the engine's JSON
@@ -206,7 +206,7 @@ object TextEtl {
         (firstOf(col("frags"), "JSON").getField("end_index") -
           firstOf(col("frags"), "JSON").getField("start_index")).as("json_len"),
         round(firstOf(col("frags"), "JSON").getField("confidence"), 4).as("json_conf"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A4: malformed + unclosed JSON -------------------------------------
 
@@ -227,7 +227,7 @@ object TextEtl {
         coalesce(exists(col("mal"),
           f => try_element_at(f.getField("meta"), lit("note")) === "unclosed"),
           lit(false)).as("has_unclosed"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A5: JSON-LD --------------------------------------------------------
 
@@ -243,7 +243,7 @@ object TextEtl {
         round(col("ld").getField("confidence"), 4).as("conf"),
         col("ld").getField("start_index").as("body_start"),
         (col("ld").getField("end_index") - col("ld").getField("start_index")).as("body_len"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A6: YAML frontmatter ----------------------------------------------
 
@@ -259,7 +259,7 @@ object TextEtl {
         round(col("y").getField("confidence"), 4).as("conf"),
         col("y").getField("start_index").as("body_start"),
         (col("y").getField("end_index") - col("y").getField("start_index")).as("body_len"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A7: sectioned JSON (`--- INLINE JSON` headers) ---------------------
 
@@ -281,7 +281,7 @@ object TextEtl {
         col("j").getField("start_index").as("body_start"),
         (col("j").getField("end_index") - col("j").getField("start_index")).as("body_len"),
         element_at(col("j").getField("meta"), "section_header").as("header"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A8: HTML table -----------------------------------------------------
 
@@ -299,7 +299,7 @@ object TextEtl {
         element_at(col("t").getField("meta"), "cols").cast("int").as("n_cols"),
         col("t").getField("start_index").as("tbl_start"),
         (col("t").getField("end_index") - col("t").getField("start_index")).as("tbl_len"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A9: generic HTML block ---------------------------------------------
 
@@ -316,7 +316,7 @@ object TextEtl {
         element_at(col("h").getField("meta"), "tag_count").cast("int").as("tag_count"),
         col("h").getField("start_index").as("blk_start"),
         (col("h").getField("end_index") - col("h").getField("start_index")).as("blk_len"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A10: CSV (header + headerless) -------------------------------------
 
@@ -337,7 +337,7 @@ object TextEtl {
         round(col("nh").getField("confidence"), 4).as("conf_nh"),
         element_at(col("nh").getField("meta"), "rows").cast("int").as("rows_nh"),
         col("c").getField("start_index").as("csv_start"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A11: key-value runs ------------------------------------------------
 
@@ -354,7 +354,7 @@ object TextEtl {
         round(col("k").getField("confidence"), 4).as("conf"),
         col("k").getField("start_index").as("kv_start"),
         (col("k").getField("end_index") - col("k").getField("start_index")).as("kv_len"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A12: JS object -----------------------------------------------------
 
@@ -375,7 +375,7 @@ object TextEtl {
         cntType(col("frags"), "JS_OBJECT").as("n_js"),
         cntType(col("frags"), "MALFORMED_JSON").as("n_malformed"),
         round(firstOf(col("frags"), "MALFORMED_JSON").getField("confidence"), 4).as("mal_conf"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A13: SQL statements ------------------------------------------------
 
@@ -394,7 +394,7 @@ object TextEtl {
         (element_at(col("sqls"), 2).getField("end_index") -
           element_at(col("sqls"), 2).getField("start_index")).as("second_len"),
         confSum(col("sqls")).as("conf_sum"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A14: raw-text complement -------------------------------------------
 
@@ -411,7 +411,7 @@ object TextEtl {
         (element_at(col("raws"), 2).getField("end_index") -
           element_at(col("raws"), 2).getField("start_index")).as("len2"),
         confSum(col("raws")).as("conf_sum"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A15/A30/A31: the full messy document -------------------------------
 
@@ -447,7 +447,7 @@ object TextEtl {
         cntType(col("after"), "KEY_VALUE").as("n_kv"),
         cntType(col("after"), "MALFORMED_JSON").as("n_malformed"),
         cntType(col("after"), "HTML_TABLE").as("n_table"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   /** A30 — corpus-wide fragment summary counts. */
   def summaryCounts(sp: SparkSession, dir: String): DataFrame =
@@ -479,7 +479,7 @@ object TextEtl {
         size(col("fragments")).as("n_fragments"),
         size(col("records")).as("n_records"),
         size(map_keys(col("summary"))).as("n_kinds"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A16: strict JSON normalization -------------------------------------
 
@@ -581,7 +581,7 @@ object TextEtl {
         concat_ws("|", split(try_element_at(col("kv"), lit("tags")), ";")).as("tags_joined"),
         TextSemantics.coerceType(try_element_at(col("kv"), lit("rating")))
           .getField("as_num").as("rating"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- A21: JS object parse ------------------------------------------------
@@ -649,7 +649,7 @@ object TextEtl {
       k(lit("  7  ")).getField("kind").as("k_seven"),
       k(lit("  7  ")).getField("as_num").as("n_seven"),
       k(col("lang")).getField("kind").as("k_lang"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- A25: key cleaning ---------------------------------------------------

@@ -123,7 +123,7 @@ object TrainingData {
       .select(col("doc_id").as("doc_a"), col("doc_b"),
         round(col("ni").cast("double") /
           (size(col("sa")) + size(col("sb")) - col("ni")), 6).as("jaccard"))
-      .persist().orderBy("doc_a")
+      .transform(OpQuery.gradedSort("doc_a"))
   }
 
   // ---- B27/B28: hyperplane LSH over embeddings -----------------------------
@@ -221,7 +221,7 @@ object TrainingData {
     cappedBucketPairs(corpus, Seq("bk"), TrainingData.MaxBucketVecs)
       .filter(col("cos") >= 0.995)
       .select("vec_a", "vec_b", "cos")
-      .persist().orderBy("vec_a", "vec_b")
+      .transform(OpQuery.gradedSort("vec_a", "vec_b"))
   }
 
   /** Graded banded instance (B27b): small enough that the oracle's
@@ -310,7 +310,7 @@ object TrainingData {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select(col("q_id"), col("rank"), col("vec_id"), col("score"))
-      .persist().orderBy("q_id", "rank")
+      .transform(OpQuery.gradedSort("q_id", "rank"))
   }
 
   /** B28b (bonus, r3) — IVF-style ANN: the brief's other scale path for
@@ -458,6 +458,7 @@ object TrainingData {
       .persist()
     val (history, batch, cents) = annSplit(emb)
     annProbeWith(history, batch, cents, topK = 3)
+      .transform(OpQuery.gradedSort("batch_id", "rank"))
   }
 
   /** B83 — `op_ann_pq_incremental`: the DEPLOYABLE 100 TB incremental
@@ -502,6 +503,7 @@ object TrainingData {
       .join(pqReconstruct(history, pqCodebook(emb)), Seq("vec_id"))
       .select(col("vec_id"), col("e"), col("cell"))
     probeAssigned(hIndexed, ivfAssignWith(batch, cents), topK = 3)
+      .transform(OpQuery.gradedSort("batch_id", "rank"))
   }
 
   /** PQ codebook geometry: k entries per block, Lloyd iterations, and
@@ -806,6 +808,7 @@ object TrainingData {
     val (history, batch, cents) = annSplit(emb)
     annProbeHierWith(history, batch, cents, annSuperCodebook(emb),
       AnnHierSuperProbe, topK = 3)
+      .transform(OpQuery.gradedSort("batch_id", "rank"))
   }
 
   /** The graded op's history/batch/codebook split over a prepped
@@ -854,7 +857,8 @@ object TrainingData {
   /** The cell-probe core over two pre-assigned `(vec_id, e, cell)`
     * sides — single owner of the score/rank/tie rules for the flat
     * and hierarchical probes (tools.AnnHierProbe measures through the
-    * same core). */
+    * same core). Unsorted: the graded builders apply
+    * [[OpQuery.gradedSort]]. */
   private[graft] def probeAssigned(assignH: DataFrame, assignB: DataFrame,
       topK: Int): DataFrame = {
     val histIdx = assignH
@@ -870,7 +874,6 @@ object TrainingData {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= topK)
       .select(col("batch_id"), col("rank"), col("hist_id"), col("score"))
-      .persist().orderBy("batch_id", "rank")
   }
 
   // ---- B60: SemDeDup — cluster-scoped semantic dedup -----------------------
@@ -938,7 +941,7 @@ object TrainingData {
       .select(col("vec_id"), col("cell"),
         coalesce(col("nbr"), col("vec_id")).as("rep"),
         col("nbr").isNull.as("kept"))
-      .persist().orderBy("vec_id")
+      .transform(OpQuery.gradedSort("vec_id"))
   }
 
   // ---- B61: sliding-window token chunking ----------------------------------
@@ -973,7 +976,7 @@ object TrainingData {
     * is driver-side and nothing is quadratic at any corpus size. */
   def chunkSliding(sp: SparkSession, dir: String): DataFrame =
     chunkWith(docs(sp, dir), ChunkWindow, ChunkStride)
-      .persist().orderBy("doc_id", "chunk_id")
+      .transform(OpQuery.gradedSort("doc_id", "chunk_id"))
 
   /** Core behind [[chunkSliding]] and `api.Graft.chunkDocuments`: the
     * same plan with caller-sized window/stride over any
@@ -1034,7 +1037,7 @@ object TrainingData {
     * in production); corpus-byte-linear at any scale. */
   def chunkCdc(sp: SparkSession, dir: String): DataFrame =
     chunkCdcWith(chunkCdcCorpus(sp, dir), CdcGram, CdcDivisor, CdcRem)
-      .persist().orderBy("doc_id", "chunk_id")
+      .transform(OpQuery.gradedSort("doc_id", "chunk_id"))
 
   /** The B81 graded corpus: originals (2·id) plus, for id % 25 = 3, a
     * UNICODE-wrapped variant (2·id+1) — multi-byte text in the graded
@@ -1115,27 +1118,18 @@ object TrainingData {
       .union(base.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") * 2 + 1).as("doc_id"),
           concat(lit("injected preamble sentence "), col("text")).as("text")))
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps (see
-    // repeatedSpansWith); the public API wires the listener
     blockDedupManaged(chunkCdcWith(corpus, CdcGram, CdcDivisor, CdcRem))._1
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** Core behind `api.Graft.dedupBlocks`: the block census + per-doc
     * rollup over ANY `chunks(doc_id, chunk_len, chunk_md5, …)` frame
     * (extra columns ignored) — compose with [[chunkCdcWith]] /
     * `api.Graft.chunkContentDefined`, or feed externally stored chunk
-    * manifests. Self-releases the chunk cache after the first
-    * materialization (per-call corpora differ on the public API, so
-    * entries would otherwise accumulate); callers that materialize
-    * twice hold [[blockDedupManaged]]. */
-  private[graft] def blockDedupWith(chunks: DataFrame): DataFrame =
-    graft.CacheLifecycle.selfReleasing(blockDedupManaged(chunks))
-
-  /** [[blockDedupWith]] plus the release handle for the persisted
-    * chunk frame (the chunk kernel pass is the dominant cost and has
-    * two consumers — the per-doc totals and the census semi-join). */
+    * manifests. Returns the result plus the release handle for the
+    * persisted chunk frame (the chunk kernel pass is the dominant cost
+    * and has two consumers — the per-doc totals and the census
+    * semi-join). */
   private[graft] def blockDedupManaged(chunks: DataFrame): (DataFrame, () => Unit) = {
     val ch = chunks.select(col("doc_id"), col("chunk_len"), col("chunk_md5"))
       .persist()
@@ -1210,9 +1204,6 @@ object TrainingData {
       .union(base.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") * 2 + 1).as("doc_id"),
           concat(lit("injected preamble sentence "), col("text")).as("text")))
-    // graded path: release handle deliberately dropped — plan-keyed
-    // cache, one process-scoped entry shared across reps (see
-    // repeatedSpansWith); the public API wires the listener
     blockRewriteManaged(
         chunkCdcWith(corpus, CdcGram, CdcDivisor, CdcRem, withText = true))._1
       .orderBy("doc_id")
@@ -1221,16 +1212,10 @@ object TrainingData {
   /** Core behind `api.Graft.dedupBlocksRewrite`: owner census +
     * rewrite over ANY `chunks(doc_id, chunk_id, chunk_len, chunk_md5,
     * chunk_txt, …)` frame (extra columns ignored) — compose with
-    * [[chunkCdcWith]]`(withText = true)`. Self-releases the chunk
-    * cache after the first materialization (per-call corpora differ
-    * on the public API); callers that materialize twice hold
-    * [[blockRewriteManaged]]. */
-  private[graft] def blockRewriteWith(chunks: DataFrame): DataFrame =
-    graft.CacheLifecycle.selfReleasing(blockRewriteManaged(chunks))
-
-  /** [[blockRewriteWith]] plus the release handle for the persisted
-    * chunk frame (the chunk kernel pass has two consumers — the owner
-    * census and the rewrite join). */
+    * [[chunkCdcWith]]`(withText = true)`. Returns the result plus the
+    * release handle for the persisted chunk frame (the chunk kernel
+    * pass has two consumers — the owner census and the rewrite
+    * join). */
   private[graft] def blockRewriteManaged(chunks: DataFrame): (DataFrame, () => Unit) = {
     val ch = chunks.select(col("doc_id"), col("chunk_id"), col("chunk_len"),
         col("chunk_md5"), col("chunk_txt"))
@@ -1416,7 +1401,8 @@ object TrainingData {
       .union(base.filter(col("doc_id") % 5 === 0)
         .select((col("doc_id") * 2 + 1).as("doc_id"),
           concat(lit("injected preamble sentence "), col("text")).as("text")))
-    repeatedSpansWith(corpus, SubstrGram, hashGrams = false).persist().orderBy("doc_id")
+    repeatedSpansWith(corpus, SubstrGram, hashGrams = false)
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** Core behind [[dedupSubstring]] and `api.Graft.repeatedSpans`:
@@ -1430,14 +1416,6 @@ object TrainingData {
     * oracle grades. */
   private[graft] def repeatedSpansWith(corpus: DataFrame, k: Int,
       hashGrams: Boolean): DataFrame =
-    // graded path: the release handle is deliberately dropped. The
-    // cache is PLAN-KEYED (CacheManager canonicalizes via sameResult),
-    // so repeated graded invocations of this same plan share ONE
-    // process-scoped entry — no per-rep accumulation (r18 ADVICE
-    // adjudicated r19: wiring the self-releasing listener here instead
-    // made every bench rep after the first recompute cold, a measured
-    // 1.9x regression; the listener belongs on the public API, where
-    // per-call corpora differ and entries WOULD accumulate).
     repeatedSpansManaged(corpus, k, hashGrams)._1
 
   /** [[repeatedSpansWith]] plus the release handle for the persisted
@@ -1494,7 +1472,7 @@ object TrainingData {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 3)
       .select(col("q_id"), col("rank"), col("vec_id"), col("score"))
-      .persist().orderBy("q_id", "rank")
+      .transform(OpQuery.gradedSort("q_id", "rank"))
   }
 
   // ---- B51: ANN recall contract --------------------------------------------
@@ -1665,7 +1643,7 @@ object TrainingData {
         col("rrf").cast("long").as("rrf"),
         col("n_methods").cast("int").as("n_methods"),
         coalesce(col("in_exact"), lit(false)).as("in_exact"))
-      .persist().orderBy("q_id", "f_rank")
+      .transform(OpQuery.gradedSort("q_id", "f_rank"))
   }
 
   // ---- B28c: product quantization ------------------------------------------
@@ -1868,7 +1846,7 @@ object TrainingData {
           concat(col("text"), lit(" "), markerCol).as("body")))
       .select(col("doc_id"), col("pred"), col("n_hits"),
         (col("pred") === col("lang")).as("is_match"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- B30: document quality scoring ---------------------------------------
@@ -1900,7 +1878,7 @@ object TrainingData {
         col("mean_tok_len"), col("alpha_ratio"), col("stop_ratio"),
         (col("alpha_ratio") * 0.6 + col("stop_ratio") * 0.2 +
           col("mean_tok_len") / lit(10.0) * 0.2).as("quality"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- B31: document fingerprinting ----------------------------------------
 
@@ -1995,7 +1973,7 @@ object TrainingData {
       .withColumn("n_bpe", regexp_count(col("text"), lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]")))
       .select(col("doc_id"), col("n_ws"), col("n_bpe"),
         round(length(col("text")).cast("double") / col("n_bpe"), 4).as("chars_per_tok"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   /** B49 — `op_mixture_weights`: per-language token mass → temperature-
     * scaled (α = 0.5) sampling weights, the standard multilingual
@@ -2075,7 +2053,7 @@ object TrainingData {
     * n_copies) is the caller's write step; the graded artifact is the
     * manifest. */
   def mixtureApply(sp: SparkSession, dir: String): DataFrame =
-    mixtureApplyOf(docs(sp, dir)).persist().orderBy("doc_id")
+    mixtureApplyOf(docs(sp, dir)).transform(OpQuery.gradedSort("doc_id"))
 
   /** The B84 manifest as a shared oracle CTE chain exposing
     * `manifest(doc_id, lang, n_tok, base, coin, n_copies)` over
@@ -2237,7 +2215,7 @@ object TrainingData {
     qualityLogitOf(corpus)
       .select(col("doc_id"), col("mtl"), col("ar"), col("sr"),
         col("logit"), (col("logit") >= 0).as("keep"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   /** The feature/logit projection WITHOUT the graded sort — reused by
     * [[qualityClassifierOf]] and the B85 keep-best canonical selection
@@ -2319,7 +2297,7 @@ object TrainingData {
       .select(col("doc_id"),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
         (coalesce(col("n_overlap"), lit(0L)) >= 1).as("contaminated"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- B37: stratified sampling --------------------------------------------
@@ -2434,7 +2412,7 @@ object TrainingData {
       .withColumn("n_tok",
         size(filter(split(col("text"), " "), t => t =!= "")).cast("long"))
       .select("doc_id", "source", "n_tok"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   /** The two-level prefix-sum pack core over ANY `(doc_id, source,
     * n_tok)` frame — shared by [[packSequences]] (whitespace token
@@ -2503,7 +2481,7 @@ object TrainingData {
       .withColumn("masked",
         regexp_replace(regexp_replace(col("text"), EmailRe, "<EMAIL>"), NumRe, "<NUM>"))
       .select(col("doc_id"), col("n_emails"), col("n_nums"), md5(col("masked")).as("masked_md5"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- B97: Luhn-validated card-number detection -----------------------------
@@ -2746,7 +2724,7 @@ object TrainingData {
       .select(col("doc_id"), col("source"), col("n_tok"), col("quality"),
         col("m_tok"), col("tok_offset"),
         floor(col("tok_offset") / 1024).cast("long").as("pack_id"))
-      .persist().orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- oracle SQL ----------------------------------------------------------

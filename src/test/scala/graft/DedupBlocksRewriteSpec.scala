@@ -29,9 +29,9 @@ class DedupBlocksRewriteSpec extends AnyFunSuite {
     import spark.implicits._
     rows.toDF("doc_id", "text")
   }
-  private def run(c: DataFrame) = TrainingData.blockRewriteWith(
+  private def run(c: DataFrame) = CacheLifecycle.selfReleasing(TrainingData.blockRewriteManaged(
     TrainingData.chunkCdcWith(c, TrainingData.CdcGram,
-      TrainingData.CdcDivisor, TrainingData.CdcRem, withText = true))
+      TrainingData.CdcDivisor, TrainingData.CdcRem, withText = true)))
 
   test("graded corpus: originals survive untouched, re-synced copies lose mass") {
     val dir = "/root/testdata/sf0.001"

@@ -27,9 +27,9 @@ class DedupBlocksSpec extends AnyFunSuite {
     import spark.implicits._
     rows.toDF("doc_id", "text")
   }
-  private def run(c: DataFrame) = TrainingData.blockDedupWith(
+  private def run(c: DataFrame) = CacheLifecycle.selfReleasing(TrainingData.blockDedupManaged(
     TrainingData.chunkCdcWith(c,
-      TrainingData.CdcGram, TrainingData.CdcDivisor, TrainingData.CdcRem))
+      TrainingData.CdcGram, TrainingData.CdcDivisor, TrainingData.CdcRem)))
 
   test("graded corpus: shifted copies share blocks; flags follow the mass rule") {
     val out = TrainingData.dedupBlocks(spark, "/root/testdata/sf0.001")

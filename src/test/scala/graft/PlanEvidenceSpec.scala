@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the physical-plan properties PLANS.md documents, so a
@@ -13,6 +15,17 @@ class PlanEvidenceSpec extends AnyFunSuite {
 
   private def plan(name: String): String =
     Registry.byName(name).build(spark, dir).queryExecution.executedPlan.toString
+
+  /** Every registry operator built ONCE for the registry-wide sweeps:
+    * (name, executed plan, optimized logical plan). The SQL cache is
+    * cleared before each build, as Bench and Verify do, so no plan
+    * reads a frame an earlier operator left cached. */
+  private lazy val registryPlans: Seq[(String, String, LogicalPlan)] =
+    Registry.all.map { q =>
+      spark.sharedState.cacheManager.clearCache()
+      val qe = q.build(spark, dir).queryExecution
+      (q.name, qe.executedPlan.toString, qe.optimizedPlan)
+    }
 
   test("op_filter_project: predicates and pruned schema reach the parquet scan") {
     val p = plan("op_filter_project")
@@ -58,13 +71,12 @@ class PlanEvidenceSpec extends AnyFunSuite {
       "op_stats_heaps",      // 1-row report assembly (totals × OLS fit) — bounded
       "op_stats_pmi",        // 1-row normalizer (total bigram count N) — bounded
       "op_tfidf_topk")       // 1-row normalizer (doc count N) crossJoin — bounded
-    for (q <- Registry.all) {
-      val p = plan(q.name)
+    for ((name, p, _) <- registryPlans) {
       assert(!p.contains("CartesianProduct"),
-        s"${q.name} plans an unbroadcast cartesian product:\n$p")
-      if (!deliberateBroadcastExpand(q.name))
+        s"$name plans an unbroadcast cartesian product:\n$p")
+      if (!deliberateBroadcastExpand(name))
         assert(!p.contains("BroadcastNestedLoopJoin"),
-          s"${q.name} plans a nested-loop join:\n$p")
+          s"$name plans a nested-loop join:\n$p")
     }
   }
 
@@ -72,11 +84,22 @@ class PlanEvidenceSpec extends AnyFunSuite {
     // Every former UDF site (fragment dedupe, HTML table parse,
     // parse_file, DataConverter convert) is now a codegen'd Catalyst
     // expression; this sweeps the whole registry so none re-grows.
-    for (q <- Registry.all) {
-      val p = plan(q.name)
-      assert(!p.contains("UDF"), s"${q.name} plans a Scala UDF:\n$p")
-    }
+    for ((name, p, _) <- registryPlans)
+      assert(!p.contains("UDF"), s"$name plans a Scala UDF:\n$p")
   }
+
+  test("tail census: the operators whose root sort reads a persisted frame") {
+    // The OpQuery.gradedSort sites plus any bare orderBy over a frame
+    // the build persisted. Pinned so that a change to the graded-tail
+    // policy (ROADMAP direction 4(b)) edits this list on purpose.
+    val persistedTails = registryPlans.collect {
+      case (name, _, s: Sort) if s.global && s.child.isInstanceOf[InMemoryRelation] => name
+    }.toSet
+    assert(persistedTails == PersistedTails,
+      s"gained a persisted tail: ${(persistedTails -- PersistedTails).toSeq.sorted}; " +
+        s"lost one: ${(PersistedTails -- persistedTails).toSeq.sorted}")
+  }
+
 
   test("op_zorder: map-side key, ONE bucket-stat shuffle, pruned scan") {
     val p = plan("op_zorder")
@@ -264,4 +287,29 @@ class PlanEvidenceSpec extends AnyFunSuite {
     // neither shuffle may carry the corpus text
     assert(!hashExchanges.exists(_.contains("text")), "a shuffle ships document text")
   }
+
+  /** The 72 operators whose root sort reads a persisted frame — the
+    * same set as before the tail policy moved into gradedSort. */
+  private val PersistedTails = Set(
+    "op_ann_hier", "op_ann_incremental", "op_ann_pq_incremental", "op_chunk_cdc",
+    "op_chunk_sliding", "op_coerce_type", "op_decontaminate", "op_dedup_blocks",
+    "op_dedup_cc", "op_dedup_embedding", "op_dedup_incremental", "op_dedup_keep_best",
+    "op_dedup_minhash_incremental", "op_dedup_ngram_jaccard", "op_dedup_substring",
+    "op_detect_csv", "op_detect_html_block", "op_detect_html_table",
+    "op_detect_js_object", "op_detect_json", "op_detect_json_ld", "op_detect_kv",
+    "op_detect_malformed_json", "op_detect_raw_text", "op_detect_sectioned_json",
+    "op_detect_sql", "op_detect_yaml", "op_dispatch_format", "op_dsir_weights",
+    "op_filter_gopher", "op_filter_project", "op_fingerprint_winnow",
+    "op_fragment_priority_dedup", "op_incremental_e2e", "op_index_update",
+    "op_join_asof", "op_kmeans_train", "op_minhash_est", "op_mixture_apply",
+    "op_pack_sequences", "op_pack_sequences_bpe", "op_parse_file", "op_parse_kv",
+    "op_perplexity_filter", "op_pipeline_e2e", "op_quality_classifier",
+    "op_rank_fusion", "op_retention_cohort", "op_scd2_merge", "op_semdedup",
+    "op_similarity_ivf", "op_similarity_lsh", "op_sink_textdir", "op_sketch_bloom",
+    "op_source_textdir", "op_stream_bloom", "op_stream_chunk_cdc",
+    "op_stream_custom_state", "op_stream_dedup_late", "op_stream_dsir",
+    "op_stream_minhash_probe", "op_stream_session", "op_stream_static_join",
+    "op_text_entropy", "op_text_langid", "op_text_pii_mask", "op_text_quality",
+    "op_text_token_count", "op_tfidf_topk", "op_ts_gapfill", "op_window_analytic",
+    "op_window_range_frame")
 }
