@@ -9,15 +9,12 @@ import org.apache.spark.sql.DataFrame
   * frames into a long-lived session (per-call corpora differ there,
   * so CacheManager's plan-keyed dedup can't collapse the entries).
   *
-  * The GRADED operator paths do NOT wire this listener: their
-  * persisted intermediates and [[OpQuery.gradedSort]] tails stay
-  * cached until the caller clears the cache (`operator_session` in
-  * `perfbench` reads `cache.residual_mb` > 0 after each request;
-  * `Bench` and `Verify` clear the SQL cache before every query).
-  * Releasing them when their query completes is ROADMAP direction
-  * 4(c). Graded paths drop the `Managed` handle; public APIs wrap
-  * with this helper, including the APIs that end in `gradedSort`
-  * (they release the sorted frame's persisted child).
+  * The GRADED operator paths do NOT wire this listener: the frames
+  * they persist inside `build` stay cached until the caller clears the
+  * cache (`Bench` and `Verify` clear the SQL cache before every query).
+  * Releasing them when their query completes, or removing them, is
+  * ROADMAP directions 4(c) and 10. Graded paths drop the `Managed` handle; public APIs wrap with
+  * this helper.
   *
   * Semantics: the first materialization of the result (or any frame
   * derived from it) runs on the warm cache; the release fires after

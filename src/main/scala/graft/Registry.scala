@@ -46,5 +46,5 @@ object Registry {
       .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 4)
         .as("revenue"),
         count(lit(1)).as("n_items"))
-      .orderBy("r_name", "o_year")
+      .transform(OpQuery.gradedSort("r_name", "o_year"))
 }

@@ -85,8 +85,9 @@ object Graft {
         df.select(validatedId(idCol, idType, "nearDupClusters").as("doc_id"),
           textCol.as("text"))))
       .withColumnRenamed("doc_id", "id")
-    graft.CacheLifecycle.selfReleasing(
-      t.transform(graft.OpQuery.gradedSort("id")), () => t.unpersist())
+    // caller-sized input: a range sort over the persisted closure, not
+    // the one-task graded sort (its bounds sample reads the cache)
+    graft.CacheLifecycle.selfReleasing(t.persist().orderBy("id"), () => t.unpersist())
   }
 
   /** [[nearDupClusters]] plus the keep-best-by-quality policy — the
@@ -545,8 +546,10 @@ object Graft {
         .as("c_id"),
       transform(col("centroid"), x => x.cast("double")).as("ce"))
     val t = graft.operators.TrainingData.annProbeWith(prep(history), prep(batch), cents, topK)
+    // caller-sized input: a range sort over the persisted probe, not
+    // the one-task graded sort (its bounds sample reads the cache)
     graft.CacheLifecycle.selfReleasing(
-      t.transform(graft.OpQuery.gradedSort("batch_id", "rank")), () => t.unpersist())
+      t.persist().orderBy("batch_id", "rank"), () => t.unpersist())
   }
 
   /** [[annProbe]] with a HIERARCHICAL two-level coarse assign — the
@@ -589,8 +592,9 @@ object Graft {
       transform(col("centroid"), x => x.cast("double")).as("ce"))
     val t = graft.operators.TrainingData.annProbeHierWith(prep(history), prep(batch),
       prepC(centroids), prepC(superCentroids), superProbe, topK)
+    // caller-sized input: a range sort over the persisted probe, as in annProbe
     graft.CacheLifecycle.selfReleasing(
-      t.transform(graft.OpQuery.gradedSort("batch_id", "rank")), () => t.unpersist())
+      t.persist().orderBy("batch_id", "rank"), () => t.unpersist())
   }
 
   /** Sliding-window token chunking for any corpus — the general form

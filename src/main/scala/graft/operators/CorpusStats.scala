@@ -284,7 +284,7 @@ object CorpusStats {
     import sp.implicits._
     val (steps, _, release) = bpeLoop(corpus, merges)
     release()
-    steps.toDF("step", "pair", "n", "units_after").orderBy("step")
+    steps.toDF("step", "pair", "n", "units_after").transform(OpQuery.gradedSort("step"))
   }
 
   /** B75 — `op_bpe_segment`: the APPLY side of the BPE pair — segment
@@ -305,7 +305,7 @@ object CorpusStats {
     * small vocab and shuffles a huge one) and a per-doc rollup with
     * map-side partials. */
   def bpeSegment(sp: SparkSession, dir: String): DataFrame =
-    bpeSegmentWith(docs(sp, dir), BpeMerges)._1.orderBy("doc_id")
+    bpeSegmentWith(docs(sp, dir), BpeMerges)._1.transform(OpQuery.gradedSort("doc_id"))
 
   /** Core behind [[bpeSegment]], [[packSequencesBpe]] and
     * `api.Graft.bpeSegmentDocs`: per-doc unit counts under the trained
@@ -564,7 +564,7 @@ object CorpusStats {
     cmsEstimate(exact, panel)
       .select(col("item"), col("cnt").as("exact"), col("est"),
         (col("est") - col("cnt")).as("slack"), (col("est") >= col("cnt")).as("over"))
-      .orderBy("item")
+      .orderBy("item") // bare: the limited panel is one partition, no exchange
   }
 
   /** The d per-row (j, bucket) cells of each item in `df`. */

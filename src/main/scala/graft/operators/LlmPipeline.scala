@@ -45,7 +45,7 @@ object LlmPipeline {
     normed.groupBy("key")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
       .select("keep_id", "n_dups")
-      .orderBy("keep_id")
+      .transform(OpQuery.gradedSort("keep_id"))
   }
 
   // ---- B52: incremental dedup against a historical index -------------------
@@ -148,7 +148,7 @@ object LlmPipeline {
       .agg(count(lit(1)).as("n_docs"),
         sum("n_chars").as("sum_chars"),
         min("doc_id").as("min_id"), max("doc_id").as("max_id"))
-      .orderBy("split", "lang")
+      .transform(OpQuery.gradedSort("split", "lang"))
 
   // ---- B53: vocabulary frequency histogram ---------------------------------
 
@@ -175,7 +175,7 @@ object LlmPipeline {
       .groupBy("decade")
       .agg(count(lit(1)).as("n_types"), sum("f").as("n_tokens"),
         min("f").as("min_f"), max("f").as("max_f"))
-      .orderBy("decade")
+      .transform(OpQuery.gradedSort("decade"))
 
   // ---- B17: MinHash near-dup candidates ------------------------------------
 
@@ -435,7 +435,7 @@ object LlmPipeline {
     * compared lexicographically: deterministic, seed-stable, and
     * reproducible in any engine. */
   def dedupMinhash(sp: SparkSession, dir: String): DataFrame =
-    minhashPairs(sp, dir).orderBy("doc_a", "doc_b")
+    minhashPairs(sp, dir).transform(OpQuery.gradedSort("doc_a", "doc_b"))
 
   /** B73 — `op_minhash_est`: the minhash RESEMBLANCE ESTIMATOR audited
     * against exact Jaccard (Broder 1997, "On the resemblance and
@@ -753,7 +753,7 @@ object LlmPipeline {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("q_id"), col("rank"), col("vec_id"), col("score"))
-      .orderBy("q_id", "rank")
+      .transform(OpQuery.gradedSort("q_id", "rank"))
   }
 
   // ---- B19: tokenize + term frequency --------------------------------------
@@ -781,7 +781,7 @@ object LlmPipeline {
         countDistinct("source").as("n_sources"),
         min("n_chars").as("min_chars"),
         max("n_chars").as("max_chars"))
-      .orderBy("lang")
+      .transform(OpQuery.gradedSort("lang"))
 
   // ---- B21: JSON props extraction ------------------------------------------
 
@@ -794,7 +794,7 @@ object LlmPipeline {
         round(avg("k"), 6).as("avg_k"),
         min("k").as("min_k"),
         max("k").as("max_k"))
-      .orderBy("event_type")
+      .transform(OpQuery.gradedSort("event_type"))
 
   // ---- oracle SQL ----------------------------------------------------------
 

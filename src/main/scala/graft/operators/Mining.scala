@@ -131,7 +131,7 @@ object Mining {
   def selectKcenter(sp: SparkSession, dir: String): DataFrame =
     selectKcenterWith(Tables.embeddings(sp, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e")),
-      KCenterK).orderBy("step")
+      KCenterK).transform(OpQuery.gradedSort("step"))
 
   /** Core behind [[selectKcenter]] and `api.Graft.coresetKcenter`.
     * All K actions run inside this call and the returned frame is a
@@ -337,7 +337,7 @@ object Mining {
       }
       edges.unpersist(); pairs0.unpersist()
       pr.select(col("id").as("node_id"), round(col("pr"), 6).as("pr6"))
-        .orderBy("node_id")
+        .transform(OpQuery.gradedSort("node_id"))
     } catch { case e: Throwable =>
       pinned.foreach(_.unpersist()); edges.unpersist(); pairs0.unpersist(); throw e
     }
@@ -427,7 +427,7 @@ object Mining {
       .select(col("r.doc_id").as("doc_id"),
         (col("i") + 1).cast("int").as("rank"),
         (-col("r.ns")).as("score"))
-      .orderBy("rank")
+      .orderBy("rank") // bare: one exploded aggregate row, no exchange
   }
 
   private val bm25Oracle: String =
@@ -486,7 +486,7 @@ object Mining {
     * large plans). The per-doc mean is the order-sensitive sum: final
     * `round(4)`. */
   def ngramLm(sp: SparkSession, dir: String): DataFrame =
-    ngramLmScores(docs(sp, dir)).orderBy("doc_id")
+    ngramLmScores(docs(sp, dir)).transform(OpQuery.gradedSort("doc_id"))
 
   /** Instance-count threshold above which a bigram PREFIX takes the
     * salted-join path: sized so it only trips when one prefix rivals a
@@ -758,7 +758,7 @@ object Mining {
         max("mad").as("mad"),
         sum(when(col("dev") > lit(3.0) * col("mad"), 1L).otherwise(0L)).as("n_outliers"),
         round(max("dev"), 6).as("max_dev"))
-      .orderBy("event_type")
+      .transform(OpQuery.gradedSort("event_type"))
   }
 
   private val anomalyMadOracle: String =
@@ -798,7 +798,7 @@ object Mining {
     * a window over the 9-row AGGREGATED frame (never the corpus). */
   def statsBenford(sp: SparkSession, dir: String): DataFrame =
     benfordOf(Tables.orders(sp, dir).select(col("o_totalprice").as("v")))
-      .orderBy("digit")
+      .orderBy("digit") // bare: the share window leaves one partition, no exchange
 
   /** Core behind [[statsBenford]] and `api.Graft.benfordScreen`:
     * the digit profile of any `values(v)` frame, v numeric ≥ 1
@@ -947,7 +947,7 @@ object Mining {
         .select((col("doc_id") * 3 + 2).as("doc_id"),
           concat(substring(col("text"), 1, 6),
             substring(col("text"), 8, FuzzyKeyLen - 7)).as("key")))
-    fuzzyJoinOf(corpus, FuzzyBucketCap).orderBy("a_id", "b_id")
+    fuzzyJoinOf(corpus, FuzzyBucketCap).transform(OpQuery.gradedSort("a_id", "b_id"))
   }
 
   /** Core behind [[fuzzyJoin]] and `api.Graft.fuzzyJoin`: dist-≤-1

@@ -87,7 +87,7 @@ object SchemaInfer {
     val out = paths.map { case (p, t) =>
       (p, if (t == "string" && dateChecks.getOrElse(p, false)) "date" else t)
     }
-    sp.createDataFrame(out).toDF("path", "ftype").orderBy("path")
+    sp.createDataFrame(out).toDF("path", "ftype").transform(OpQuery.gradedSort("path"))
   }
 
   val queries: Seq[OpQuery] = Seq(

@@ -44,7 +44,7 @@ object Sections {
         trim(element_at(col("parts"), 1)).as("title"),
         length(when(size(col("parts")) === 2, trim(element_at(col("parts"), 2)))
           .otherwise(trim(col("sec")))).as("content_len"))
-      .orderBy("doc_id", "sec_idx")
+      .transform(OpQuery.gradedSort("doc_id", "sec_idx"))
 
   // ---- A27: format dispatch ------------------------------------------------
 
@@ -103,7 +103,7 @@ object Sections {
     merged.select(col("doc_id"),
       col("id_s").cast("long").as("id"), col("lang_v"), col("n_tables"),
       col("code_snippet"), col("extra_notes_note_text"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- A32: whole DataConverter.parse, end to end --------------------------
@@ -124,7 +124,7 @@ object Sections {
   def convertPipeline(sp: SparkSession, dir: String): DataFrame =
     docs(sp, dir)
       .select(col("doc_id"), convertF(convertDoc).as("converted"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A29: flatten single-key structs -------------------------------------
 
@@ -154,7 +154,7 @@ object Sections {
       "user struct<name: string>, meta struct<a: string, b: bigint>")
     docs(sp, dir)
       .select(col("doc_id"), to_json(flattenSingleKeys(nested, schema)).as("flat_json"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- oracle SQL ----------------------------------------------------------

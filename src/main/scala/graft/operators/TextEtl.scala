@@ -57,7 +57,7 @@ object TextEtl {
   def sourceText(sp: SparkSession, dir: String): DataFrame =
     docs(sp, dir).select(col("doc_id"), col("lang"), col("source"),
       col("n_chars"), length(col("text")).as("text_len"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   /** A1b — `op_source_textdir`: the reference's NATIVE input shape
     * (one messy text file per document, `script.py:562-563`) read
@@ -187,7 +187,7 @@ object TextEtl {
   def sinkJson(sp: SparkSession, dir: String): DataFrame =
     docs(sp, dir).select(col("doc_id"),
       to_json(struct(col("doc_id"), col("lang"))).as("js"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A3: strict JSON detection -----------------------------------------
 
@@ -455,7 +455,7 @@ object TextEtl {
       .select(explode(detectF(messyDoc)).as("f"))
       .groupBy(col("f.format_type").as("format_type"))
       .agg(count(lit(1)).as("n"))
-      .orderBy("format_type")
+      .transform(OpQuery.gradedSort("format_type"))
 
   /** A31 — fragments in document order with their spans. */
   def fragmentSort(sp: SparkSession, dir: String): DataFrame =
@@ -465,7 +465,7 @@ object TextEtl {
         col("f.format_type").as("format_type"),
         col("f.start_index").as("start_index"),
         col("f.end_index").as("end_index"))
-      .orderBy("doc_id", "seq")
+      .transform(OpQuery.gradedSort("doc_id", "seq"))
 
   /** A32 — the reference's top-level `parse_file` API
     * (`etl_parser.py:1053-1082`) over the messy corpus: fragments +
@@ -494,7 +494,7 @@ object TextEtl {
         get_json_object(col("j"), "$.meta.lang").as("mlang"),
         get_json_object(col("j"), "$.meta.n").cast("long").as("mn"),
         get_json_object(col("j"), "$.tags[1]").as("tag2"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A17: JSON repair ----------------------------------------------------
 
@@ -510,7 +510,7 @@ object TextEtl {
         get_json_object(col("r"), "$.status").as("status"),
         get_json_object(col("r"), "$.tags[1]").as("tag2"),
         get_json_object(col("r"), "$.note").as("note"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A18: CSV fragment parse ---------------------------------------------
 
@@ -526,7 +526,7 @@ object TextEtl {
         "name string, code string, n bigint"), Map.empty[String, String]))
       .select(col("doc_id"), col("p.name").as("name"), col("p.code").as("code"),
         col("p.n").as("n"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- A19: HTML table parse -----------------------------------------------
@@ -542,7 +542,7 @@ object TextEtl {
       .select(col("doc_id"), col("row_idx"),
         element_at(col("r"), "Name").as("name"),
         element_at(col("r"), "Code").as("code"))
-      .orderBy("doc_id", "row_idx")
+      .transform(OpQuery.gradedSort("doc_id", "row_idx"))
 
   // ---- A20: key-value parse ------------------------------------------------
 
@@ -601,7 +601,7 @@ object TextEtl {
         get_json_object(col("j"), "$.name").as("name"),
         get_json_object(col("j"), "$.count").cast("long").as("cnt"),
         get_json_object(col("j"), "$.active").cast("boolean").as("active"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- A22: entity extraction ----------------------------------------------
@@ -617,7 +617,7 @@ object TextEtl {
         TextSemantics.entityPhone(col("p")).as("phone"),
         TextSemantics.entityUrl(col("p")).as("url"),
         TextSemantics.entityPrice(col("p")).as("price"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A23: OCR fixes ------------------------------------------------------
 
@@ -627,7 +627,7 @@ object TextEtl {
   def fixOcr(sp: SparkSession, dir: String): DataFrame =
     docs(sp, dir)
       .select(col("doc_id"), TextSemantics.fixOcr(a23Doc).as("fixed"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- A24: type coercion battery ------------------------------------------
 
@@ -661,7 +661,7 @@ object TextEtl {
       TextSemantics.cleanKey(concat(col("lang"), lit(" Code"))).as("k3"),
       TextSemantics.cleanKey(lit("a  b--c!")).as("k4"),
       TextSemantics.cleanKey(concat(lit(" "), col("source"), lit(" ID "))).as("k5"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- oracle SQL ----------------------------------------------------------
 

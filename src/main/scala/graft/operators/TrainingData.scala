@@ -97,7 +97,7 @@ object TrainingData {
         hamming(col("a.sig"), col("b.sig")).as("hamming"))
       .filter(col("hamming") <= 2)
       .distinct()
-      .orderBy("doc_a", "doc_b")
+      .transform(OpQuery.gradedSort("doc_a", "doc_b"))
   }
 
   // ---- B26: exact n-gram Jaccard ------------------------------------------
@@ -261,13 +261,13 @@ object TrainingData {
     * confirmed pairs. Same corpus construction and cap as B27; the
     * single-table B27 remains the fixed-key baseline whose recall the
     * banding repairs (measured planted recall 77.4% → 100% at 20
-    * copies, BandedLshProbe). Scale shape identical to B17's banded
+    * copies, PLANS.md r16). Scale shape identical to B17's banded
     * minhash: corpus shuffles once per table row, candidates
     * output-linear, per-bucket cap bounds the degenerate expansion. */
   def dedupEmbeddingBanded(sp: SparkSession, dir: String): DataFrame =
     bandedPairs(embeddingCorpus(sp, dir), BandedTables, BandedPlanes,
       TrainingData.MaxBucketVecs, 64, 0.995)
-      .orderBy("vec_a", "vec_b")
+      .transform(OpQuery.gradedSort("vec_a", "vec_b"))
 
   /** Capped-bucket pair expansion shared by [[dedupEmbedding]] (keyed
     * by the single sign bucket) and `api.Graft.nearDupEmbeddings`
@@ -438,8 +438,8 @@ object TrainingData {
     * volume is LINEAR in the corpus — this re-keying (r16) replaced
     * the r15 fixed 8-literal stand-in whose measured candidate growth
     * was quadratic (cand/batch 15.7 → 1255 across sf0.01 → 20×;
-    * PLANS.md r15, fix measured 6.8× wall at 20 copies in
-    * AnnScaleProbe before porting here). The residual scale term is
+    * PLANS.md r15, fix measured 6.8× wall at 20 copies before
+    * porting here). The residual scale term is
     * the ASSIGN step: N×K broadcast map-side cosines (no shuffle),
     * viable to the `api.Graft.annProbe` broadcast ceiling of K ≈ 10⁶;
     * past that a production deployment assigns HIERARCHICALLY (score
@@ -730,7 +730,7 @@ object TrainingData {
     * GROWS with the corpus and mean cell occupancy stays the constant
     * ≈ stride/4 history members — the property that keeps the probe's
     * candidate volume linear (see [[annIncremental]]). 157 is the
-    * stride AnnScaleProbe validated (K = 255 / 6.8× wall on the
+    * stride validated in PLANS.md r15 (K = 255 / 6.8× wall on the
     * 20-copy corpus); it also lands K = 4 at the sf0.01 gate and
     * stays nonempty on any corpus containing vec_id 0. The scale
     * corpora's copy re-key (+k·10⁶, and 10⁶ mod 157 = 67 ≠ 0)
@@ -813,8 +813,8 @@ object TrainingData {
 
   /** The graded op's history/batch/codebook split over a prepped
     * `(vec_id, e)` embeddings frame — SINGLE owner shared with
-    * tools.AnnScaleProbe so the scale evidence can never drift onto a
-    * different workload than the op it describes. History = orig
+    * tools.AnnHierProbe so the scale evidence (PLANS.md r15, r16) can
+    * never drift onto a different workload than the op it describes. History = orig
     * vec_id % 4 == 0 (re-keyed 2·id); batch = the rest plus planted
     * re-posts (% 8, 2·id+1); codebook = [[annCodebook]]'s
     * corpus-scaled centroids. */
@@ -1206,7 +1206,7 @@ object TrainingData {
           concat(lit("injected preamble sentence "), col("text")).as("text")))
     blockRewriteManaged(
         chunkCdcWith(corpus, CdcGram, CdcDivisor, CdcRem, withText = true))._1
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** Core behind `api.Graft.dedupBlocksRewrite`: owner census +
@@ -1588,7 +1588,7 @@ object TrainingData {
       .agg(count(lit(1)).as("n_exact"),
         sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hit"))
       .withColumn("recall", round(col("n_hit") / col("n_exact"), 4))
-      .orderBy("method", "q_id")
+      .transform(OpQuery.gradedSort("method", "q_id"))
   }
 
   /** B89 RRF constants: the standard k = 60 (Cormack, Clarke &
@@ -1690,7 +1690,7 @@ object TrainingData {
         concat_ws("", transform(col("bc"), s => s.getField("c_id").cast("string")))
           .as("code"),
         round(col("sum_d2") / 64.0, 6).as("recon_mse"))
-      .orderBy("vec_id")
+      .transform(OpQuery.gradedSort("vec_id"))
   }
 
   // ---- B90: per-domain frequency capping -------------------------------------
@@ -1728,7 +1728,7 @@ object TrainingData {
       .select(col("doc_id"),
         when(col("doc_id") % 3 =!= 0, lit("boilerplate-farm"))
           .otherwise(col("source")).as("source")), DomainCap)
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   /** Core over `corpus(doc_id, source)` for known-answer specs and
     * `api.Graft.capDomains`. */
@@ -1798,7 +1798,7 @@ object TrainingData {
         length(col("norm")).as("n_after"),
         (col("norm") =!= col("text")).as("changed"),
         md5(col("norm")).as("norm_md5"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- B29: language identification ----------------------------------------
 
@@ -1898,7 +1898,7 @@ object TrainingData {
       .select(col("doc_id"), col("fp"), col("n_blocks"),
         coalesce(try_element_at(col("fpb"), lit(1)), lit(-1L)).as("fp_b1"),
         coalesce(try_element_at(col("fpb"), lit(2)), lit(-1L)).as("fp_b2"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- B32/B33: multimodal (binary payload) --------------------------------
@@ -1942,7 +1942,7 @@ object TrainingData {
         }
       }
     }.toDF("doc_id", "mime", "n_bytes", "width", "height", "channels", "mean_byte")
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** B34 — resize analog: the payload is downsampled to a fixed
@@ -1962,7 +1962,7 @@ object TrainingData {
         element_at(col("thumb"), 8).as("t7"),
         aggregate(col("thumb"), lit(0L),
           (a, c) => (a * 31 + c) % 1000000007L).as("thumb_fp"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   /** B35 — token counting two ways (whitespace + BPE-ish regex pieces
     * word/number/punct), the per-doc stats a tokenizer-budget pipeline
@@ -2007,7 +2007,7 @@ object TrainingData {
         round(sqrt(col("n_tok")) / col("s"), 6).as("weight"),
         round((sqrt(col("n_tok")) / col("s")) / (col("n_tok") / col("tot")), 4)
           .as("oversample"))
-      .orderBy("lang")
+      .transform(OpQuery.gradedSort("lang"))
   }
 
   /** Coin modulus for B84's per-doc extra-copy draw: the fractional
@@ -2126,7 +2126,7 @@ object TrainingData {
       .agg(count(lit(1)).as("n_docs"),
         sum(col("nc")).as("n_copies"),
         sum(col("nc") * col("n_tok")).as("sum_tok"))
-      .orderBy("shard", "lang")
+      .transform(OpQuery.gradedSort("shard", "lang"))
 
   /** The per-copy epoch frame behind [[epochExportOf]] and
     * `api.Graft.epochMaterialize`: one row per physical copy —
@@ -2257,7 +2257,7 @@ object TrainingData {
         element_at(col("samples"), 2).as("f1"),
         element_at(col("samples"), 3).as("f2"),
         element_at(col("samples"), 4).as("f3"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- B36: eval-set decontamination ---------------------------------------
 
@@ -2321,7 +2321,7 @@ object TrainingData {
       .withColumn("coin", coin)
       .filter(col("coin") < threshold)
       .select(col("doc_id"), col("lang"), col("coin"), col("n_chars"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
   }
 
   // ---- B94: one-pass weighted sampling ---------------------------------------
@@ -2515,7 +2515,7 @@ object TrainingData {
         .when(col("doc_id") % 19 === 0,
           concat(col("text"), lit(" num 4111111111111112")))
         .otherwise(col("text")).as("text"))
-    piiLuhnOf(planted).orderBy("doc_id")
+    piiLuhnOf(planted).transform(OpQuery.gradedSort("doc_id"))
   }
 
   /** The Luhn validity of one digit-run column — the single fold
@@ -2576,7 +2576,7 @@ object TrainingData {
       .select(col("lang"), col("source"),
         floor(col("n_chars") / 100).cast("long").as("len_b")),
       Seq("lang", "source", "len_b"), KAnonK)
-      .orderBy("level")
+      .transform(OpQuery.gradedSort("level"))
 
   /** Core behind [[kAnonymity]] and `api.Graft.kAnonymity`: the
     * per-level risk report over any quasi-identifier columns. */
@@ -2632,7 +2632,7 @@ object TrainingData {
         round(col("st.top_n").cast("double") / col("st.n_bigrams"), 4).as("top_frac"),
         round(lit(1.0) - col("st.n_distinct").cast("double") / col("st.n_bigrams"), 4)
           .as("dup_frac"))
-      .orderBy("doc_id")
+      .transform(OpQuery.gradedSort("doc_id"))
 
   // ---- B41: sharded training export ----------------------------------------
 
@@ -2655,7 +2655,7 @@ object TrainingData {
       .agg(count(lit(1)).as("n_docs"),
         min("doc_id").as("min_id"), max("doc_id").as("max_id"),
         sum("n_chars").as("sum_chars"))
-      .orderBy("shard")
+      .transform(OpQuery.gradedSort("shard"))
 
   /** The physical write behind [[exportShards]]: JSONL partitioned by
     * the same deterministic shard key. */

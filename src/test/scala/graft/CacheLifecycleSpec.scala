@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * for frames that are never materialized are evicted (unregistered
   * AND released) once more than [[CacheLifecycle.MaxOutstanding]] are
   * outstanding, and a materialized frame removes its own listener.
-  * Also pins that the public APIs ending in [[OpQuery.gradedSort]]
-  * release the frame that sort persisted.
+  * Also pins that the public APIs ending in a persisted range sort
+  * release the frame that sort reads.
   */
 class CacheLifecycleSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
@@ -47,7 +47,7 @@ class CacheLifecycleSpec extends AnyFunSuite {
       "a fired listener must remove itself from the outstanding queue")
   }
 
-  test("APIs ending in gradedSort release their persisted tail after one action") {
+  test("APIs ending in a persisted range sort release their tail after one action") {
     import spark.implicits._
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     def cached(plan: LogicalPlan): Boolean =

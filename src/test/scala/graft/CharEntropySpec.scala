@@ -76,7 +76,7 @@ class CharEntropySpec extends AnyFunSuite {
     val graded = CorpusStats.textEntropy(spark, dir)
     val shuffles = graded.queryExecution.executedPlan.toString
       .linesIterator.count(_.contains("Exchange"))
-    // one range exchange for the graded total sort, nothing else
+    // one exchange for the graded total sort, nothing else
     assert(shuffles <= 1, s"expected map-side plan, saw $shuffles exchanges")
   }
 

@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Sort}
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the physical-plan properties PLANS.md documents, so a
@@ -17,15 +20,23 @@ class PlanEvidenceSpec extends AnyFunSuite {
     Registry.byName(name).build(spark, dir).queryExecution.executedPlan.toString
 
   /** Every registry operator built ONCE for the registry-wide sweeps:
-    * (name, executed plan, optimized logical plan). The SQL cache is
-    * cleared before each build, as Bench and Verify do, so no plan
-    * reads a frame an earlier operator left cached. */
-  private lazy val registryPlans: Seq[(String, String, LogicalPlan)] =
+    * (name, executed plan). The SQL cache is cleared before each build,
+    * as Bench and Verify do, so no plan reads a frame an earlier
+    * operator left cached. */
+  private lazy val registryPlans: Seq[(String, SparkPlan)] =
     Registry.all.map { q =>
       spark.sharedState.cacheManager.clearCache()
-      val qe = q.build(spark, dir).queryExecution
-      (q.name, qe.executedPlan.toString, qe.optimizedPlan)
+      (q.name, q.build(spark, dir).queryExecution.executedPlan)
     }
+
+  /** Every node of a physical tree, through AQE's current plan, its
+    * query stages and cached subplans. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+    case _ => p.children.flatMap(nodes)
+  })
 
   test("op_filter_project: predicates and pruned schema reach the parquet scan") {
     val p = plan("op_filter_project")
@@ -71,7 +82,8 @@ class PlanEvidenceSpec extends AnyFunSuite {
       "op_stats_heaps",      // 1-row report assembly (totals × OLS fit) — bounded
       "op_stats_pmi",        // 1-row normalizer (total bigram count N) — bounded
       "op_tfidf_topk")       // 1-row normalizer (doc count N) crossJoin — bounded
-    for ((name, p, _) <- registryPlans) {
+    for ((name, plan) <- registryPlans) {
+      val p = plan.toString
       assert(!p.contains("CartesianProduct"),
         s"$name plans an unbroadcast cartesian product:\n$p")
       if (!deliberateBroadcastExpand(name))
@@ -84,22 +96,27 @@ class PlanEvidenceSpec extends AnyFunSuite {
     // Every former UDF site (fragment dedupe, HTML table parse,
     // parse_file, DataConverter convert) is now a codegen'd Catalyst
     // expression; this sweeps the whole registry so none re-grows.
-    for ((name, p, _) <- registryPlans)
-      assert(!p.contains("UDF"), s"$name plans a Scala UDF:\n$p")
+    for ((name, plan) <- registryPlans)
+      assert(!plan.toString.contains("UDF"), s"$name plans a Scala UDF:\n$plan")
   }
 
-  test("tail census: the operators whose root sort reads a persisted frame") {
-    // The OpQuery.gradedSort sites plus any bare orderBy over a frame
-    // the build persisted. Pinned so that a change to the graded-tail
-    // policy (ROADMAP direction 4(b)) edits this list on purpose.
-    val persistedTails = registryPlans.collect {
-      case (name, _, s: Sort) if s.global && s.child.isInstanceOf[InMemoryRelation] => name
-    }.toSet
-    assert(persistedTails == PersistedTails,
-      s"gained a persisted tail: ${(persistedTails -- PersistedTails).toSeq.sorted}; " +
-        s"lost one: ${(PersistedTails -- persistedTails).toSeq.sorted}")
+  test("tail census: no operator plans a range exchange for its graded sort") {
+    // OpQuery.gradedSort sorts the result in one partition (ROADMAP
+    // 4(b)); a bare orderBy over a multi-partition child plans a range
+    // exchange whose bounds sample re-runs that child. A range
+    // exchange the operator asks for itself (op_join_skew_salted's
+    // repartitionByRange, origin REPARTITION_BY_COL) is allowed, and
+    // so is op_sketch_bloom's persisted range sort (measured faster
+    // than the one-partition sort at local[4]; see its call site).
+    val ranged = registryPlans.collect {
+      case (name, p) if name != "op_sketch_bloom" && nodes(p).exists {
+        case e: ShuffleExchangeExec => e.shuffleOrigin == ENSURE_REQUIREMENTS &&
+          e.outputPartitioning.isInstanceOf[RangePartitioning]
+        case _ => false
+      } => name
+    }
+    if (ranged.nonEmpty) fail(s"range-sort tails: ${ranged.sorted.mkString(", ")}")
   }
-
 
   test("op_zorder: map-side key, ONE bucket-stat shuffle, pruned scan") {
     val p = plan("op_zorder")
@@ -131,37 +148,19 @@ class PlanEvidenceSpec extends AnyFunSuite {
   }
 
   test("op_join_asof: two skinny hash shuffles, ONE fused Window node") {
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    // every node of the physical tree, through AQE's current plan, its
-    // query stages and cached subplans
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => nodes(q.plan)
-      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
-      case _ => p.children.flatMap(nodes)
-    })
     val top = Registry.byName("op_join_asof").build(spark, dir).queryExecution.executedPlan
-    // the op's compute tail is persisted before the graded sort (r22):
-    // count inside the cached subplan that holds the as-of window
-    val cached = nodes(top).collect { case m: InMemoryTableScanExec => m.relation.cachedPlan }
-      .filter(c => nodes(c).exists(_.isInstanceOf[WindowExec]))
-    assert(cached.length == 1, s"expected one cached as-of subplan:\n$top")
-    val body = nodes(cached.head)
+    val body = nodes(top)
     val hashExchanges = body.count {
       case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[HashPartitioning]
       case _ => false
     }
     assert(hashExchanges == 2,
-      s"expected click-dedup + as-of-window shuffles only ($hashExchanges):\n${cached.head}")
+      s"expected click-dedup + as-of-window shuffles only ($hashExchanges):\n$top")
     val windows = body.count(_.isInstanceOf[WindowExec])
-    assert(windows == 1, s"both last() functions must share one Window node:\n${cached.head}")
-    assert(!nodes(top).exists(n =>
+    assert(windows == 1, s"both last() functions must share one Window node:\n$top")
+    assert(!body.exists(n =>
       n.isInstanceOf[CartesianProductExec] || n.isInstanceOf[BroadcastNestedLoopJoinExec]))
   }
 
@@ -287,29 +286,4 @@ class PlanEvidenceSpec extends AnyFunSuite {
     // neither shuffle may carry the corpus text
     assert(!hashExchanges.exists(_.contains("text")), "a shuffle ships document text")
   }
-
-  /** The 72 operators whose root sort reads a persisted frame — the
-    * same set as before the tail policy moved into gradedSort. */
-  private val PersistedTails = Set(
-    "op_ann_hier", "op_ann_incremental", "op_ann_pq_incremental", "op_chunk_cdc",
-    "op_chunk_sliding", "op_coerce_type", "op_decontaminate", "op_dedup_blocks",
-    "op_dedup_cc", "op_dedup_embedding", "op_dedup_incremental", "op_dedup_keep_best",
-    "op_dedup_minhash_incremental", "op_dedup_ngram_jaccard", "op_dedup_substring",
-    "op_detect_csv", "op_detect_html_block", "op_detect_html_table",
-    "op_detect_js_object", "op_detect_json", "op_detect_json_ld", "op_detect_kv",
-    "op_detect_malformed_json", "op_detect_raw_text", "op_detect_sectioned_json",
-    "op_detect_sql", "op_detect_yaml", "op_dispatch_format", "op_dsir_weights",
-    "op_filter_gopher", "op_filter_project", "op_fingerprint_winnow",
-    "op_fragment_priority_dedup", "op_incremental_e2e", "op_index_update",
-    "op_join_asof", "op_kmeans_train", "op_minhash_est", "op_mixture_apply",
-    "op_pack_sequences", "op_pack_sequences_bpe", "op_parse_file", "op_parse_kv",
-    "op_perplexity_filter", "op_pipeline_e2e", "op_quality_classifier",
-    "op_rank_fusion", "op_retention_cohort", "op_scd2_merge", "op_semdedup",
-    "op_similarity_ivf", "op_similarity_lsh", "op_sink_textdir", "op_sketch_bloom",
-    "op_source_textdir", "op_stream_bloom", "op_stream_chunk_cdc",
-    "op_stream_custom_state", "op_stream_dedup_late", "op_stream_dsir",
-    "op_stream_minhash_probe", "op_stream_session", "op_stream_static_join",
-    "op_text_entropy", "op_text_langid", "op_text_pii_mask", "op_text_quality",
-    "op_text_token_count", "op_tfidf_topk", "op_ts_gapfill", "op_window_analytic",
-    "op_window_range_frame")
 }

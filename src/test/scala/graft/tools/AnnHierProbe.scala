@@ -19,7 +19,7 @@ import graft.plans.VectorKernels.cosine
   * IVF nprobe trade, applied one level up). This tool measures the
   * trade on the scale corpus at a deliberately assign-dominated K
   * (stride 17 → K ≈ 2350, where the flat probe measured ~30 s,
-  * AnnScaleProbe r16): wall of the full top-3 probe, cell-assignment
+  * PLANS.md r16): wall of the full top-3 probe, cell-assignment
   * agreement vs flat, and probe-output row agreement vs flat, per S.
   *
   * NOTE on this corpus: the synthetic embeddings are near-uniform, so

@@ -3,7 +3,10 @@ package graft.tools
 /** Dev-only single-query timer: runs one (or a few) registered graded
   * queries with the Bench methodology (noop write of the full plan,
   * warm pass + best-of-N) without paying the 137-query suite — for
-  * iterating on one operator's plan before a full floor run.
+  * iterating on one operator's plan before a full floor run. Each
+  * recorded run also reports its Spark job count (`SparkListenerJobStart`
+  * events, `build` included): for a fixed plan and input it is
+  * deterministic, so it shows a removed job where timing noise cannot.
   *
   * Run: `sbt "Test/runMain graft.tools.BenchOne <op,op,...> [runs]
   * [sfDir]"` (defaults 3, /root/testdata/sf0.1; cpus via
@@ -33,16 +36,28 @@ object BenchOne {
     try graft.sources.Tables.events(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
     for (n <- names) {
-      def once(): Double = {
+      // (seconds, jobs) of one cleared-cache run
+      def once(): (Double, Int) = {
         spark.sharedState.cacheManager.clearCache()
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+        jobs.set(0)
         val t0 = System.nanoTime()
         qs(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        val s = (System.nanoTime() - t0) / 1e9
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+        (s, jobs.get)
       }
       once() // warm (JIT + codegen + footers), unrecorded
-      val ss = (1 to runs).map(_ => once())
-      println(f"[benchone] $n%-32s best=${ss.min}%6.3f s  all=[${ss.map(s => f"$s%.3f").mkString(", ")}]")
+      val rs = (1 to runs).map(_ => once())
+      val ss = rs.map(_._1)
+      println(f"[benchone] $n%-32s best=${ss.min}%6.3f s  all=[${ss.map(s => f"$s%.3f").mkString(", ")}]" +
+        s"  jobs=[${rs.map(_._2).mkString(", ")}]")
     }
     spark.stop()
   }
