@@ -231,8 +231,7 @@ object Graft {
       dim: DataFrame, dimKey: String): DataFrame = {
     val mask = graft.operators.Relational.keyBloomMaskOf(
       dim.select(col(dimKey).cast("long").as("k")).distinct())
-    fact.filter(graft.operators.Relational.keyBloomPass(
-      col(factKey).cast("long"), mask))
+    fact.filter(graft.operators.Curation.bloomHit(mask, col(factKey).cast("long")))
   }
 
   /** Slowly-changing-dimension type-2 merge — the general form of

@@ -56,6 +56,36 @@ object Curation {
   private[graft] val BloomA = Seq(31L, 131L, 1313L, 13131L)
   private[graft] val BloomB = Seq(7L, 77L, 777L, 7777L)
 
+  /** Bit `j` of key or hash `h`: the geometry's one formula, as a plan
+    * expression and on the driver. The driver form uses exact
+    * arithmetic, so it throws where the ANSI plan expression throws and
+    * equals it everywhere else (JoinBloomSpec pins the two equal). */
+  private[graft] def bloomBit(h: Column, j: Int): Column =
+    (h * BloomA(j) + BloomB(j)) % 1000000007L % BloomBits
+  private[graft] def bloomBit(h: Long, j: Int): Long =
+    Math.addExact(Math.multiplyExact(h, BloomA(j)), BloomB(j)) % 1000000007L % BloomBits
+
+  /** The filter as a driver-side bitmask with `bits` set: BloomBits/64
+    * = 1024 longs (8 KiB) whatever the number of bits set. */
+  private[graft] def bloomMask(bits: Iterator[Long]): Array[Long] = {
+    val mask = new Array[Long](BloomBits / 64)
+    bits.foreach(b => mask((b / 64).toInt) |= (1L << (b % 64).toInt))
+    mask
+  }
+
+  /** The k-bit membership test of `h` against `mask` — a pure map-side
+    * projection (zero joins, zero state), the one probe of every
+    * Bloom operator and API. */
+  private[graft] def bloomHit(mask: Array[Long], h: Column): Column = {
+    val maskLit = typedlit(mask.toSeq)
+    BloomA.indices.map { j =>
+      val bit = bloomBit(h, j)
+      call_function("shiftright",
+        element_at(maskLit, (bit / 64).cast("int") + 1),
+        (bit % 64).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
+    }.reduce(_ && _)
+  }
+
   /** B68 — `op_sketch_bloom`: Bloom-filter membership decontamination
     * (Bloom 1970, "Space/time trade-offs in hash coding with allowable
     * errors", CACM 13(7); the trillion-token-scale dedup/decontam
@@ -118,7 +148,7 @@ object Curation {
   private[graft] def bloomManaged(train: DataFrame,
       evalGrams0: DataFrame): (DataFrame, () => Unit) = {
     val evalGrams = evalGrams0.persist()
-    val maskLit = typedlit(bloomMaskOf(evalGrams).toSeq)
+    val mask = bloomMaskOf(evalGrams)
     val inEval = evalGrams.withColumn("in_eval", lit(1))
     // cluster the corpus TEXT by doc_id before shingling: one cheap
     // text-row exchange buys BOTH the (doc_id, sh) distinct and the
@@ -135,7 +165,7 @@ object Curation {
       .join(broadcast(inEval), Seq("sh"), "left")
     val result = trainG
       .withColumn("h", rollingHash(col("sh"), lit(1), length(col("sh"))))
-      .select(col("doc_id"), maskHit(maskLit, col("h")).as("bhit"),
+      .select(col("doc_id"), bloomHit(mask, col("h")).as("bhit"),
         col("in_eval").isNotNull.as("ehit"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"),
@@ -153,28 +183,21 @@ object Curation {
   private def bloomCells(df: DataFrame, gram: Column): DataFrame =
     df.withColumn("h", rollingHash(gram, lit(1), length(gram)))
       .select(col("*"), explode(array(BloomA.indices.map { j =>
-        (((col("h") * BloomA(j) + BloomB(j)) % 1000000007L) % BloomBits).as("b")
+        bloomBit(col("h"), j).as("b")
       }: _*)).as("bit"))
       .drop("h")
 
   // ---- B76s: the streaming Bloom probe -------------------------------------
 
-  /** The filter as a DRIVER-SIDE bitmask: ≤ [[BloomBits]]/64 = 1024
-    * longs (8 KiB) whatever the eval suite's size — bounded by the
-    * geometry constant, the same by-construction bound as the
+  /** The filter as a DRIVER-SIDE bitmask ([[bloomMask]]) — bounded by
+    * the geometry constant, the same by-construction bound as the
     * hot-prefix literal set and the k-means centroid pull. This is
     * what makes the STREAMING probe stateless: the mask embeds in the
     * plan as one literal array, so the per-row verdict needs no join,
     * no explode, no aggregation state. */
-  private[graft] def bloomMaskOf(evalGrams: DataFrame): Array[Long] = {
-    val mask = new Array[Long](BloomBits / 64)
-    bloomCells(evalGrams, col("sh")).select(col("bit")).distinct()
-      .collect().foreach { r =>
-        val b = r.getLong(0)
-        mask((b / 64).toInt) |= (1L << (b % 64).toInt)
-      }
-    mask
-  }
+  private[graft] def bloomMaskOf(evalGrams: DataFrame): Array[Long] =
+    bloomMask(bloomCells(evalGrams, col("sh")).select(col("bit")).distinct()
+      .collect().iterator.map(_.getLong(0)))
 
   /** B76s plan builder — the Bloom probe as a STATELESS per-row
     * projection over batch OR streaming documents: shingle, hash each
@@ -184,20 +207,7 @@ object Curation {
     * decontamination gate Dolma-style pipelines run in front of the
     * exact (batch) pass. Unified API: the same builder serves the t2
     * batch grade and the MemoryStream parity spec. */
-  /** The k-bit mask membership test for a gram hash `h` against the
-    * literal bitmask (as ≤ [[BloomBits]]/64 longs) — single owner for
-    * the streaming probe and the batch op's probe side. */
-  private def maskHit(maskLit: Column, h: Column): Column =
-    BloomA.indices.map { j =>
-      val bit = ((h * BloomA(j) + BloomB(j)) % 1000000007L) % BloomBits
-      call_function("shiftright",
-        element_at(maskLit, (bit / 64).cast("int") + 1),
-        (bit % 64).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
-    }.reduce(_ && _)
-
   private[graft] def bloomProbePlan(docs: DataFrame, mask: Array[Long]): DataFrame = {
-    val maskLit = typedlit(mask.toSeq)
-    def hitH(h: Column): Column = maskHit(maskLit, h)
     TextShingles.withShingles(docs, col("text"))
       .withColumn("g", array_distinct(col("shingles")))
       // hash once per gram (HOF lambdas re-evaluate inlined subtrees —
@@ -205,7 +215,7 @@ object Curation {
       // not k)
       .withColumn("hs", transform(col("g"), sh => rollingHash(sh, lit(1), length(sh))))
       .select(col("doc_id"), size(col("g")).cast("long").as("n_grams"),
-        size(filter(col("hs"), h => hitH(h))).cast("long").as("n_bloom"))
+        size(filter(col("hs"), h => bloomHit(mask, h))).cast("long").as("n_bloom"))
       .withColumn("flag_bloom", lit(5) * col("n_bloom") >= col("n_grams"))
   }
 

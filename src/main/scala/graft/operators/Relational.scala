@@ -925,13 +925,20 @@ object Relational {
     * only to GRADE the pruning (a production pipeline keeps the
     * passing rows and shuffles those alone). */
   def joinBloom(s: SparkSession, dir: String): DataFrame = {
-    val dk = Tables.supplier(s, dir).filter(col("s_nationkey") < 5)
+    // the dim side's distinct keys in ONE action: the mask, n_dim_keys
+    // and the truth join's broadcast side all derive from this array
+    // on the driver (the explicit broadcast held these keys on the
+    // driver already, so collecting them adds no bound)
+    val keys = Tables.supplier(s, dir).filter(col("s_nationkey") < 5)
       .select(col("s_suppkey").cast("long").as("k")).distinct()
-    val mask = keyBloomMaskOf(dk)
-    val nDim = dk.count()
+      .collect().map(_.getLong(0))
+    val mask = Curation.bloomMask(keys.iterator.flatMap(k =>
+      Curation.BloomA.indices.map(Curation.bloomBit(k, _))))
+    import s.implicits._
+    val dk = keys.toSeq.toDF("k")
     val ver = Tables.lineitem(s, dir)
       .select(col("l_suppkey").cast("long").as("k"))
-      .withColumn("pass", keyBloomPass(col("k"), mask))
+      .withColumn("pass", Curation.bloomHit(mask, col("k")))
       .join(broadcast(dk.withColumn("t", lit(true))), Seq("k"), "left")
       .withColumn("t", coalesce(col("t"), lit(false)))
     ver.agg(
@@ -940,34 +947,20 @@ object Relational {
         count(when(col("t"), 1)).as("n_true"),
         count(when(col("pass") && !col("t"), 1)).as("n_false_pass"),
         count(when(col("t") && !col("pass"), 1)).as("n_missed"))
-      .select(col("n_fact"), lit(nDim).as("n_dim_keys"),
+      .select(col("n_fact"), lit(keys.length.toLong).as("n_dim_keys"),
         col("n_pass"), col("n_true"), col("n_false_pass"), col("n_missed"),
         round(col("n_false_pass").cast("double") /
           (col("n_fact") - col("n_true")), 6).as("fp_rate"))
   }
 
-  /** The B68 filter geometry over INTEGER keys: the dim side's keys
-    * as a driver-side 1024-long bitmask (8 KiB whatever the dim
-    * size). Shared by [[joinBloom]] and `api.Graft.bloomPrefilter`. */
-  private[graft] def keyBloomMaskOf(dimKeys: DataFrame): Array[Long] = {
-    val mask = new Array[Long](Curation.BloomBits / 64)
-    dimKeys.select(explode(array(Curation.BloomA.indices.map { j =>
-        (col("k") * Curation.BloomA(j) + Curation.BloomB(j)) % 1000000007L % Curation.BloomBits
-      }: _*)).as("bit")).distinct().collect().foreach { r =>
-        val b = r.getLong(0); mask((b / 64).toInt) |= (1L << (b % 64).toInt) }
-    mask
-  }
-
-  /** The k-bit membership probe against a literal mask — a pure
-    * map-side projection (zero joins, zero state). */
-  private[graft] def keyBloomPass(h: Column, mask: Array[Long]): Column = {
-    val maskLit = typedlit(mask.toSeq)
-    Curation.BloomA.indices.map { j =>
-      val bit = (h * Curation.BloomA(j) + Curation.BloomB(j)) % 1000000007L % Curation.BloomBits
-      call_function("shiftright", element_at(maskLit, (bit / 64).cast("int") + 1),
-        (bit % 64).cast("int")).bitwiseAND(lit(1L)) === lit(1L)
-    }.reduce(_ && _)
-  }
+  /** The B68 filter geometry over the INTEGER keys of a caller-sized
+    * dim side (`api.Graft.bloomPrefilter`): the distinct BITS are
+    * collected, never the keys, so the driver pull stays ≤ 2¹⁶ rows
+    * whatever the dim size. */
+  private[graft] def keyBloomMaskOf(dimKeys: DataFrame): Array[Long] =
+    Curation.bloomMask(dimKeys.select(explode(array(Curation.BloomA.indices.map(j =>
+        Curation.bloomBit(col("k"), j)): _*)).as("bit"))
+      .distinct().collect().iterator.map(_.getLong(0)))
 
   val queries: Seq[OpQuery] = Seq(
     OpQuery("op_join_bloom",

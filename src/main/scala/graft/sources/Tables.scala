@@ -1,6 +1,12 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet scans over the harness star schema (TESTDATA.md).
   *
@@ -11,14 +17,88 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dominant cost, so every query projects/filters as early as possible
   * and lets the scan prune (verify via `.explain`: `PushedFilters`,
   * `ReadSchema`).
+  *
+  * Per-path metadata is memoized by ONE mechanism, [[memoized]]:
+  *
+  *  - the inferred schema of each table. `spark.read.parquet(path)`
+  *    infers it with a distributed footer-reading job (10-15 ms, one
+  *    per read, before any query work starts); a repeat read of an
+  *    unchanged table reuses the memo through `spark.read.schema(..)`
+  *    and runs no Spark job;
+  *  - the `events` nanos probe ([[events]]), a LIMIT scan job.
+  *
+  * Each entry keys on the table path and is valid for one key: the
+  * listing [[fingerprint]] (`path:length:mtime` of every file) plus the
+  * session's explicitly set SQL confs whose name contains `parquet`
+  * (`spark.sql.legacy.parquet.nanosAsLong` turns `events.ts` into a
+  * long, `spark.sql.parquet.binaryAsString` turns binary into string).
+  * Spark part-file names carry a per-write UUID, so a re-drop into the
+  * same path always moves the fingerprint and re-infers. The listing
+  * is a driver-side metadata call, orders cheaper than the job it
+  * saves. Latest-wins keeps each memo O(paths) under periodic re-drops
+  * (a fingerprint-keyed set would accrete one dead entry per drop).
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas = new ConcurrentHashMap[String, (String, StructType)]()
+
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    // a miss returns the inferring read itself: no second listing
+    var inferred: DataFrame = null
+    val schema = memoized(schemas, spark, path) {
+      inferred = spark.read.parquet(path); inferred.schema }
+    if (inferred != null) inferred
+    else schema match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path) // unlistable: Spark raises its own error
+    }
+  }
+
+  /** The listing fingerprint of `root`: `path:length:mtime` of every
+    * file under it (a single-file table is its own listing). */
+  private def fingerprint(fs: FileSystem, root: Path): String = {
+    val files = ArrayBuffer.empty[String]
+    val dirs = scala.collection.mutable.Stack(root)
+    while (dirs.nonEmpty) fs.listStatus(dirs.pop()).foreach { s =>
+      if (s.isDirectory) dirs.push(s.getPath)
+      else files += s"${s.getPath}:${s.getLen}:${s.getModificationTime}"
+    }
+    files.sorted.mkString(",")
+  }
+
+  /** `compute`'s value for `path` under the memo rule (class doc):
+    * reused while the listing and the parquet confs are unchanged,
+    * else recomputed. `None` if `path` cannot be listed.
+    *
+    * Runs inside `ConcurrentHashMap.compute`, not check-then-act:
+    * concurrent first callers for one drop run ONE job, and a failing
+    * `compute` records nothing. TOCTOU: a value is memoized only if the listing is
+    * IDENTICAL before and after `compute` — a re-drop landing mid-job
+    * means the job read data the first fingerprint does not describe,
+    * so the previous entry stays and the next call recomputes. */
+  private def memoized[V](memo: ConcurrentHashMap[String, (String, V)],
+      spark: SparkSession, path: String)(compute: => V): Option[V] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val confs = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted.mkString(",")
+    def key(): Option[String] =
+      try Some(s"${fingerprint(fs, root)}|$confs")
+      catch { case _: java.io.FileNotFoundException => None }
+    key().map { k =>
+      var out: V = null.asInstanceOf[V]
+      memo.compute(fs.makeQualified(root).toString, (_, prev) =>
+        if (prev != null && prev._1 == k) { out = prev._2; prev }
+        else {
+          out = compute
+          if (key().contains(k)) (k, out) else prev
+        })
+      out
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")
@@ -77,55 +157,24 @@ object Tables {
     * ≥ ~1.5e18 ns (2017+) while micros stay ≤ ~4.1e15 through 2100,
     * so an order-of-magnitude check separates the encodings. LIMIT
     * scan of the first [[ProbeRows]] non-null values (one row group,
-    * any scale), memoized so only the first accessor call per JVM and
-    * DATA DROP pays the job. The memo maps each dir to the listing
-    * fingerprint of the parquet files (name, length, mtime) that last
-    * passed — ADVICE r13: a long-lived service that receives a
-    * re-drop into the SAME path switching nanos→plain-micros must
-    * re-probe, not ride a stale per-path pass; the listing is a
-    * driver-side metadata op, orders cheaper than the probe job it
-    * gates, and latest-wins keeps the memo O(dirs) under periodic
-    * re-drops. */
+    * any scale). The pass is [[memoized]] (class doc), so only the
+    * first accessor call per JVM and DATA DROP pays the job — a
+    * long-lived service that receives a re-drop into the SAME path
+    * switching nanos→plain-micros re-probes (ADVICE r13), and a probe
+    * FAILURE records nothing. */
   private val ProbeRows = 100
-  // dir → fingerprint of the last drop that PASSED the probe: memory
-  // stays O(dirs) under periodic re-drops (a fingerprint-keyed set
-  // would accrete one dead entry per drop forever)
-  private val nanosProbed = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def eventsFingerprint(raw: DataFrame, d: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$d/events.parquet")
-    val fs = p.getFileSystem(raw.sparkSession.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(p).filter(_.isFile).map(s =>
-      s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-    files.sorted.mkString(",")
-  }
+  private val nanosProbed = new ConcurrentHashMap[String, (String, Unit)]()
   private def requireNanosRange(raw: DataFrame, d: String): Unit = {
-    val fp = eventsFingerprint(raw, d)
-    // compute, not check-then-act: concurrent first callers for one
-    // drop run ONE probe job, and a probe FAILURE records nothing —
-    // the next call re-probes instead of silently passing bad data
-    nanosProbed.compute(d, (_, prev) => {
-      if (prev == fp) fp
-      else {
-        import org.apache.spark.sql.functions.col
-        raw.select(col("ts")).filter(col("ts").isNotNull).head(ProbeRows).foreach { r =>
-          val v = r.getLong(0)
-          require(math.abs(v) >= 1e16.toLong,
-            s"events.ts in $d/events.parquet scans as long but |$v| is too " +
-              "small for an epoch in NANOS (plain int64 micros/millis drop?) — " +
-              "refusing to floor-divide; fix the Tables.events adaptation")
-        }
-        // ADVICE r14 (TOCTOU): memoize only if the listing is IDENTICAL
-        // before and after the probe job — a re-drop landing mid-probe
-        // means the probe read data the pre-probe fingerprint does not
-        // describe, so record nothing (keep/clear the previous entry)
-        // and let the next call re-probe the settled drop. The steady
-        // state pays one extra listStatus per PROBE (not per call);
-        // the memoized fast path stays a single listing — driver-side
-        // metadata, cheap on local FS, and on an object store still
-        // orders cheaper than the probe job it gates.
-        if (eventsFingerprint(raw, d) == fp) fp else prev
+    memoized(nanosProbed, raw.sparkSession, s"$d/events.parquet") {
+      import org.apache.spark.sql.functions.col
+      raw.select(col("ts")).filter(col("ts").isNotNull).head(ProbeRows).foreach { r =>
+        val v = r.getLong(0)
+        require(math.abs(v) >= 1e16.toLong,
+          s"events.ts in $d/events.parquet scans as long but |$v| is too " +
+            "small for an epoch in NANOS (plain int64 micros/millis drop?) — " +
+            "refusing to floor-divide; fix the Tables.events adaptation")
       }
-    })
+    }
     ()
   }
   def documents(s: SparkSession, d: String): DataFrame  = apply(s, d, "documents")

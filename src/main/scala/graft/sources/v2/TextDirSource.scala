@@ -248,7 +248,14 @@ private[v2] class TextDirScan(dir: String, required: StructType, opts: TextDirOp
     })
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  // planned once per scan: the planner and `prepareForExecution` each
+  // hold their own copy of the BatchScanExec, and each copy asks its
+  // batch for partitions. The scan is built once per query, so a new
+  // query over the same path still lists afresh.
+  @transient private lazy val partitions = plan()
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  private def plan(): Array[InputPartition] = {
     val spark = SparkSession.active
     val root = new HPath(dir)
     val fs = root.getFileSystem(hadoopConf)

@@ -17,7 +17,9 @@ import graft.operators.Relational
   *     the bloom projection (the pass flag must be computable before
   *     any shuffle);
   *  4. api.Graft.bloomPrefilter keeps every matching row and drops
-  *     pruned rows on a hand corpus. */
+  *     pruned rows on a hand corpus;
+  *  5. `build` runs the jobs of ONE action (the dim keys' collect),
+  *     and the driver-side bit formula equals the plan expression. */
 class JoinBloomSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val dir = "/root/testdata/sf0.001"
@@ -42,5 +44,31 @@ class JoinBloomSpec extends AnyFunSuite {
       .select("k").as[Long].collect().toSet
     assert(Set(10L, 20L, 30L).subsetOf(kept), "no false negatives")
     assert(kept.size < 100, s"bloom must prune nearly everything: ${kept.size}")
+  }
+
+  test("build runs the jobs of one action: the dim keys' collect") {
+    val sc = spark.sparkContext
+    Relational.joinBloom(spark, dir) // warm the table-schema memo
+    val (_, keysOnce) = Jobs.count(sc)(graft.sources.Tables.supplier(spark, dir)
+      .filter(col("s_nationkey") < 5).select(col("s_suppkey").cast("long").as("k"))
+      .distinct().collect())
+    val (_, build) = Jobs.count(sc)(Relational.joinBloom(spark, dir))
+    assert(keysOnce > 0)
+    assert(build == keysOnce,
+      s"op_join_bloom's build ran $build jobs; one collect of its dim keys runs $keysOnce")
+  }
+
+  test("the driver-side bloom bit equals the plan expression, and so do the masks") {
+    import spark.implicits._
+    import graft.operators.Curation
+    val keys = Seq(0L, 1L, 7L, 42L, 65535L, 1000000006L, 123456789012L, -5L, -1000000008L)
+    val df = keys.toDF("k")
+    for (j <- Curation.BloomA.indices) {
+      val sql = df.select(Curation.bloomBit(col("k"), j)).as[Long].collect().toSeq
+      assert(sql == keys.map(Curation.bloomBit(_, j)), s"bit row $j")
+    }
+    val pos = keys.filter(_ >= 0)
+    assert(Relational.keyBloomMaskOf(pos.toDF("k")).toSeq ==
+      Curation.bloomMask(pos.iterator.flatMap(k => Curation.BloomA.indices.map(Curation.bloomBit(k, _)))).toSeq)
   }
 }

@@ -192,4 +192,55 @@ class TablesShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("NANOS"),
       "the stale per-path memo bypassed the probe on a re-drop")
   }
+
+  test("schema memo: a repeat read of an unchanged table runs no Spark job") {
+    val T = graft.sources.Tables
+    for (t <- Seq("supplier", "lineitem")) {
+      val first = T(spark, dir, t) // infers (or hits a memo an earlier test made)
+      val (again, jobs) = Jobs.count(spark.sparkContext)(T(spark, dir, t))
+      assert(jobs == 0, s"$t: the second read re-inferred its schema with a Spark job")
+      assert(again.schema == first.schema)
+      assert(again.count() == first.count())
+    }
+  }
+
+  test("schema memo: a re-drop into the SAME path with a new column type re-infers") {
+    val sp = spark
+    import sp.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft_schema_redrop")
+    tmpDirs += d
+    Seq(1L, 2L).toDF("k").write.mode("overwrite").parquet(s"$d/t.parquet")
+    assert(graft.sources.Tables(sp, d.toString, "t").schema("k").dataType.simpleString == "bigint")
+    Seq("a", "b", "c").toDF("k").write.mode("overwrite").parquet(s"$d/t.parquet")
+    val redropped = graft.sources.Tables(sp, d.toString, "t")
+    assert(redropped.schema("k").dataType.simpleString == "string",
+      "the memo served the previous drop's schema")
+    assert(redropped.as[String].collect().sorted.toSeq == Seq("a", "b", "c"))
+  }
+
+  /** The memo keys on the session's parquet confs too: a file written
+    * WITHOUT Spark's schema metadata (plain parquet-mr, as other
+    * engines write) has an unannotated binary column, which Spark
+    * infers as binary, or as string under `spark.sql.parquet.binaryAsString`. */
+  test("schema memo: changing a parquet conf between two reads re-infers") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.MessageTypeParser
+    val d = java.nio.file.Files.createTempDirectory("graft_schema_conf")
+    tmpDirs += d
+    val schema = MessageTypeParser.parseMessageType("message m { required binary b; }")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$d/t.parquet/part-0.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("b", Binary.fromString("x")))
+    finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    def bType = graft.sources.Tables(spark, d.toString, "t").schema("b").dataType.simpleString
+    assert(!spark.conf.getOption(key).contains("true"), s"$key set on the shared session")
+    assert(bType == "binary")
+    spark.conf.set(key, "true")
+    try assert(bType == "string", s"the memo ignored $key")
+    finally spark.conf.unset(key)
+    assert(bType == "binary", s"the memo kept the $key schema after the conf was unset")
+  }
 }

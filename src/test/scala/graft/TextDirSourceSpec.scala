@@ -309,6 +309,40 @@ class TextDirSourceSpec extends AnyFunSuite {
     }
   }
 
+  test("one listing per query: every copy of the scan node shares the planned partitions") {
+    withDir { dir =>
+      (1 to 3).foreach(i => Files.writeString(dir.resolve(s"f$i.txt"), s"doc $i"))
+      import org.apache.spark.sql.execution.SparkPlan
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+      def scans(p: SparkPlan): Seq[BatchScanExec] = p match {
+        case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+        case s: BatchScanExec => Seq(s)
+        case o => o.children.flatMap(scans)
+      }
+      val df = load(dir)
+      assert(df.collect().length == 3)
+      // the planner's node and the prepared node are two copies; each
+      // asks the scan for its partitions, and the scan lists once
+      val Seq(planned) = scans(df.queryExecution.sparkPlan)
+      val Seq(executed) = scans(df.queryExecution.executedPlan)
+      assert(planned ne executed)
+      assert(planned.inputPartitions.length == 3)
+      assert(planned.inputPartitions.zip(executed.inputPartitions).forall { case (a, b) => a eq b },
+        "each copy of the scan node listed the directory again")
+    }
+  }
+
+  test("the listing memo is per query, not per path: a new query sees an added file") {
+    withDir { dir =>
+      Files.writeString(dir.resolve("a.txt"), "alpha")
+      assert(load(dir).collect().length == 1)
+      Files.writeString(dir.resolve("b.txt"), "beta")
+      assert(load(dir).collect().map(_.getAs[String]("text")).sorted.toSeq == Seq("alpha", "beta"))
+      assert(graft.api.Graft.readDocuments(spark, dir.toString).count() == 2)
+    }
+  }
+
   /** The readDocuments contract fixture: two visible top-level
     * documents (one with a space in its name) beside hidden files, a
     * crashed sink's attempt directory and a nested directory. */

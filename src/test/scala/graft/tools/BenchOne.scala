@@ -5,8 +5,11 @@ package graft.tools
   * warm pass + best-of-N) without paying the 137-query suite — for
   * iterating on one operator's plan before a full floor run. Each
   * recorded run also reports its Spark job count (`SparkListenerJobStart`
-  * events, `build` included): for a fixed plan and input it is
-  * deterministic, so it shows a removed job where timing noise cannot.
+  * events): `jobs` is the total, `build_jobs` the jobs started inside
+  * `build` (eager driver-side actions and schema inference, told apart
+  * by a local property set around `build`). For a fixed plan and input
+  * both are deterministic, so they show a removed job where timing
+  * noise cannot.
   *
   * Run: `sbt "Test/runMain graft.tools.BenchOne <op,op,...> [runs]
   * [sfDir]"` (defaults 3, /root/testdata/sf0.1; cpus via
@@ -36,28 +39,34 @@ object BenchOne {
     try graft.sources.Tables.events(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+    val sc = spark.sparkContext
+    val Phase = "graft.benchone.phase"
+    val jobs, buildJobs = new java.util.concurrent.atomic.AtomicInteger
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
         jobs.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty(Phase) == "build")) buildJobs.incrementAndGet()
+      }
     })
     for (n <- names) {
-      // (seconds, jobs) of one cleared-cache run
-      def once(): (Double, Int) = {
+      // (seconds, jobs, jobs inside build) of one cleared-cache run
+      def once(): (Double, Int, Int) = {
         spark.sharedState.cacheManager.clearCache()
-        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-        jobs.set(0)
+        org.apache.spark.ListenerBusAccess.drain(sc)
+        jobs.set(0); buildJobs.set(0)
         val t0 = System.nanoTime()
-        qs(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        sc.setLocalProperty(Phase, "build")
+        val df = try qs(n)(spark, sfDir) finally sc.setLocalProperty(Phase, null)
+        df.write.format("noop").mode("overwrite").save()
         val s = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
-        (s, jobs.get)
+        org.apache.spark.ListenerBusAccess.drain(sc)
+        (s, jobs.get, buildJobs.get)
       }
       once() // warm (JIT + codegen + footers), unrecorded
       val rs = (1 to runs).map(_ => once())
       val ss = rs.map(_._1)
       println(f"[benchone] $n%-32s best=${ss.min}%6.3f s  all=[${ss.map(s => f"$s%.3f").mkString(", ")}]" +
-        s"  jobs=[${rs.map(_._2).mkString(", ")}]")
+        s"  jobs=[${rs.map(_._2).mkString(", ")}]  build_jobs=[${rs.map(_._3).mkString(", ")}]")
     }
     spark.stop()
   }

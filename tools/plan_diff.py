@@ -8,7 +8,10 @@ Exits 1 if any operator differs (or is present on one side only),
 
 Before comparing, each plan masks what changes from run to run on
 identical code: expression ids (`#123`), `plan_id=123`, object hashes
-(`@1f2e3d`) and `<File>.scala:<line>` call-site positions.
+(`@1f2e3d`), `<File>.scala:<line>` call-site positions and RDD ids
+(`MapPartitionsRDD[743]` of a checkpointed frame: the id counts every
+RDD the process made before it, so it moves when an EARLIER operator
+in the dump runs a different number of jobs).
 
 Three operators differ between two dumps of the SAME commit at sf0.01
 even after masking, so a diff naming only them shows no change:
@@ -34,6 +37,7 @@ MASKS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"@[0-9a-f]+\b"), "@H"),
     (re.compile(r"\b(\w+)\.scala:\d+"), r"\1.scala:L"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
 ]
 
 
